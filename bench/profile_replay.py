@@ -179,10 +179,6 @@ def _timeline(events_path: str, t0_ms: float, t1_ms: float, cores: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
-    ap.add_argument("--prefetch", type=int, default=0,
-                    help="1 = pipeline next-slice scan under the current "
-                    "merge (rejected at bench shape — see replay()), "
-                    "0 = sequential (replay default)")
     ap.add_argument("--pipeline", type=int, default=0,
                     help="1 = async-commit write-ahead replay, 2 = full "
                     "stage overlap (see replay(pipeline=))")
@@ -257,7 +253,6 @@ def main() -> None:
         spark, log, table,
         batch_span=max(args.events // args.batches, 1),
         extract_text_from_html=True,
-        prefetch=bool(args.prefetch),
         pipeline=(False, True, "full")[args.pipeline],
     )
     sec = time.perf_counter() - t0

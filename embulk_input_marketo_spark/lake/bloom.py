@@ -17,10 +17,17 @@ Design:
   granule coalescing deliberately obscures). Deletes stay in the bloom —
   conservative and sound (a deleted key reads its tombstone and returns
   absent).
-- The bloom delta for a commit is computed by a SPARK JOB over the key
-  column of the files the commit just wrote (one narrow columnar read of
-  O(batch) rows — never a driver loop, never a recompute of the batch
-  plan), grouped per bucket with an Arrow-batched numpy kernel.
+- A complete bloom is always exactly bits(the bucket's key set): every
+  write that can only ADD keys (merge-on-read appends, copy-on-write folds
+  — LWW keeps every key, tombstones included) ORs the batch's keys into
+  it, and every write that can shed keys (vacuum, compaction,
+  ``delete_where``, rehash) rebuilds it from the files it wrote.
+- Copy-on-write commits compute their delta from the BATCH, in the same
+  per-bucket job that probes it (:func:`add_keys`, run by each group of the
+  merge's pre-pass); the other writers use :func:`build_bloom_deltas`, a
+  Spark job over the key column of the files the commit just wrote. Both
+  group per bucket with an Arrow-batched numpy kernel — never a driver
+  loop.
 - Storage mirrors the ``FileSet`` side-file discipline (table.py:80): one
   binary side file per touched bucket per commit
   (``keybloom-<version>-<bucket>-<nonce>.bin``), pointer map in the
@@ -152,6 +159,26 @@ def load_bloom(meta_dir: str, name: str) -> tuple[np.ndarray, int, int, int]:
             raise ValueError(f"not a bloom side file: {name}")
         bits = np.frombuffer(f.read(m_bits // 8), dtype=np.uint8)
     return bits, m_bits, k, n
+
+
+def add_keys(
+    meta_dir: str, ptr: str | None, h1: np.ndarray, h2: np.ndarray,
+    m_bits: int, k: int,
+) -> tuple[bytes, int, bool | None]:
+    """One bucket's bloom after adding the keys hashed as (h1, h2):
+    → (old bits | the keys' bits, the old bloom's key count, might).
+    ``might`` says whether the old bloom may hold any of the keys; it is
+    None when the bucket has no bloom (``ptr`` None — the old bits are then
+    empty and the count 0). Runs where the keys are, so only the pointer
+    name travels, never bloom bytes."""
+    pos = _positions(h1, h2, m_bits, k)
+    bits = np.zeros(m_bits // 8, dtype=np.uint8)
+    _set_bits(bits, pos)
+    if ptr is None:
+        return bits.tobytes(), 0, None
+    old, _mb, _k, n_old = load_bloom(meta_dir, ptr)
+    might = bool(_test_bits(old, pos).any())
+    return np.bitwise_or(old, bits).tobytes(), n_old, might
 
 
 def union_bloom(old: np.ndarray | None, delta: bytes) -> bytes:

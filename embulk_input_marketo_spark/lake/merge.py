@@ -19,10 +19,10 @@ Physical strategy, chosen for 10^10-event scale:
 1. batch keys hash into a set of touched buckets → ONLY those buckets' files
    are read and rewritten (copy-on-write bounded by batch key spread, not
    table size).
-2. new bucket contents = salted-LWW-reduce( old_bucket_rows ∪ batch_rows ) —
-   a single hash aggregate with map-side partial aggregation instead of a
-   join; associative/commutative because (warc_ts, _lsn) totally orders rows
-   per key. Hot keys are pre-split by the salt phase; AQE coalesces the rest.
+2. new bucket contents = LWW-reduce( old_bucket_rows ∪ batch_rows ) — a
+   hash aggregate per (bucket, key) instead of a join, run in the write
+   stage behind the one exchange that places rows by bucket; associative/
+   commutative because (warc_ts, _lsn) totally orders rows per key.
 3. results written partitioned-by-bucket into a fresh snapshot directory;
    the commit (new files + batch_id + checkpoint advance) is one atomic
    manifest swap.
@@ -318,7 +318,9 @@ def _bloom_ptr_updates(
     n_buckets: int | None = None,
 ) -> dict[str, str]:
     """Incremental per-bucket key-bloom maintenance (lake/bloom.py) for the
-    buckets this commit touched — {} when blooms aren't enabled.
+    buckets this commit touched — {} when blooms aren't enabled. (cow
+    commits take their blooms from the batch instead and come here only as
+    a fallback — see :func:`_cow_bloom_updates`.)
 
     The delta is computed by ONE narrow Spark job over the key column of
     the files the commit just wrote (never a recompute of the batch plan,
@@ -332,7 +334,7 @@ def _bloom_ptr_updates(
     ``enable_key_blooms`` backfills — a partial bloom would turn "definitely
     absent" into a lie.
 
-    ``mode='rebuild'`` (CoW folds / compaction / full rewrites): the new
+    ``mode='rebuild'`` (compaction / full rewrites): the new
     files ARE the bucket's complete content (LWW folding keeps one row per
     key and tombstones keep their keys), so a fresh bloom replaces the old
     one — shedding keys vacuumed before the fold and keeping the filter
@@ -427,10 +429,13 @@ def merge_batch(
     mode='cow' (copy-on-write): every touched bucket is folded each commit —
     cheapest reads, O(touched-bucket data) writes.
 
-    salt_buckets: optional extra pre-split of hot keys. Spark's map-side
-    partial aggregation already caps per-key reducer input at one row per map
-    partition, so the salt phase (an extra shuffle) is only worth it for
-    pathological single-key skew; default off.
+    salt_buckets: optional extra pre-split of hot keys in the mor
+    ``pre_reduce`` and its compactions. Spark's map-side partial aggregation
+    already caps per-key reducer input at one row per map partition, so the
+    salt phase (an extra shuffle) is only worth it for pathological
+    single-key skew; default off. cow ignores it: its fold reduces in the
+    write's one bucket exchange (for cow, ``replay`` applies it only to
+    the batch pre-dedup).
 
     derive: optional {column: Column} of DERIVED schema columns computed
     AFTER the bucket exchange, in the write tasks — the column rides the
@@ -454,6 +459,13 @@ def merge_batch(
     merge-on-read (their read LWW-folds generations) until a later fold or
     compaction collapses them — buckets already holding ≥ 8 generations
     fold regardless, bounding read amplification.
+
+    Bloom invariant (tables with key blooms): a bucket's complete bloom is
+    always exactly bits(its key set). Writes that only add keys OR the new
+    keys in; writes that can shed keys (vacuum, compaction, ``delete_where``,
+    rehash) rebuild. A cow commit relies on it: its new blooms are the old
+    ones | the batch's keys, computed in its pre-pass, with no job over the
+    files it wrote.
     """
     m = table.manifest()
     if _already_applied(m, batch_id, window, channel):
@@ -465,7 +477,7 @@ def merge_batch(
 
     if mode == "cow":
         return _merge_cow(
-            spark, table, m, batch_full, batch_id, full_cols, salt_buckets,
+            spark, table, m, batch_full, batch_id, full_cols,
             checkpoint, window, channel, lineage, publish,
             bloom_fast_path=bloom_fast_path,
         )
@@ -855,72 +867,98 @@ def commit_staged_merge(
     )
 
 
+def _cow_prepass(m: Manifest, batch_full: DataFrame, meta_dir: str) -> dict:
+    """The copy-on-write commit's one pre-pass job over the (persisted)
+    batch → {bucket: row}. Per bucket: ``n`` rows with a key, ``d`` of them
+    deletes, ``nk`` null-key rows; on bloom tables also ``might`` (the old
+    bloom may hold a batch key), ``bloom`` (old bits | the batch's keys)
+    and ``n_old`` (the old bloom's key count).
+
+    Each bloom group loads only its own bucket's bloom, by the pointer name
+    shipped in the closure — the driver never loads or ships bloom bytes.
+    Tables without blooms take a JVM-only aggregate."""
+    key = m.key_col
+    nk = F.col(key).isNull()
+    if not m.bloom_conf:
+        rows = batch_full.groupBy("_b").agg(
+            F.count_if(~nk).alias("n"),
+            F.count_if(F.col("_deleted") & ~nk).alias("d"),
+            F.count_if(nk).alias("nk"),
+        ).collect()
+        return {int(r["_b"]): r for r in rows}
+
+    from embulk_input_marketo_spark.lake import bloom as B
+
+    m_bits, k = int(m.bloom_conf["m_bits"]), int(m.bloom_conf["k"])
+    ptrs = dict(m.bloom_ptrs)
+    with_data = set(m.files)
+
+    def per_bucket(pdf):
+        import pandas as pd
+
+        b = str(int(pdf["_b"].iloc[0]))
+        null = pdf["_nk"].to_numpy()
+        keyed = ~null
+        bits, n_old, might = B.add_keys(
+            meta_dir, ptrs.get(b), pdf["_h1"].to_numpy()[keyed],
+            pdf["_h2"].to_numpy()[keyed], m_bits, k,
+        )
+        if might is None:
+            # no bloom: a bucket holding data stays a candidate (unknown is
+            # never absent); an empty bucket holds no key at all
+            might = b in with_data
+        return pd.DataFrame({
+            "_b": [int(b)],
+            "n": [int(keyed.sum())],
+            "d": [int((pdf["_deleted"].to_numpy() & keyed).sum())],
+            "nk": [int(null.sum())],
+            "might": [might],
+            "bloom": [bits],
+            "n_old": [n_old],
+        })
+
+    rows = (
+        batch_full.select("_b", nk.alias("_nk"), "_deleted", *B.hash_cols(key))
+        .groupBy("_b")
+        .applyInPandas(
+            per_bucket,
+            "_b int, n long, d long, nk long, might boolean, bloom binary,"
+            " n_old long",
+        )
+        .collect()
+    )
+    return {int(r["_b"]): r for r in rows}
+
+
 def _merge_cow(
-    spark, table, m, batch_full, batch_id, full_cols, salt_buckets,
+    spark, table, m, batch_full, batch_id, full_cols,
     checkpoint, window, channel, lineage, publish=True,
     bloom_fast_path=False,
 ) -> MergeResult:
     """Copy-on-write path: every touched bucket folds each commit — unless
     ``bloom_fast_path`` proves a bucket's incoming keys all-absent, in which
     case that bucket APPENDS a new generation instead of reading + rewriting
-    (see merge_batch docstring). Null-key rows are counted from the same
-    stats collect and dropped (see merge_batch docstring for the policy)."""
+    (see merge_batch docstring). Null-key rows are counted by the pre-pass
+    and dropped (see merge_batch docstring for the policy).
+
+    Two passes: the pre-pass (:func:`_cow_prepass`) and the write, whose
+    one exchange places rows by bucket and reduces them per (bucket, key)
+    in the same stage. Blooms are never rebuilt from the written files: a
+    touched bucket's new bloom is its old bloom | the batch's keys, which
+    equals a rebuild because a complete bloom is always bits(the bucket's
+    key set) and the fold keeps every key (see lake/bloom.py). The key
+    count is the rows written (from the parquet footers), plus the old
+    count for an append. A bucket with data but no bloom gets one rebuilt
+    from its folded files."""
     key = m.key_col
     batch_full.persist()
-    _bloom_bcasts: list = []
     try:
-        might_col = F.lit(True)
-        if bloom_fast_path and m.bloom_conf:
-            from embulk_input_marketo_spark.lake import bloom as B
-
-            # r6 (r5 ADVICE): load + broadcast only the blooms of buckets
-            # this batch actually touches — at bloom.py's design scale
-            # (~10^5 buckets) loading the full set was repeated multi-GB
-            # driver work per slice. The distinct is one cheap job over the
-            # just-persisted batch (its materialization was due anyway for
-            # the stats pass below).
-            present = {
-                int(r["_b"])
-                for r in batch_full.select("_b").distinct().collect()
-                if r["_b"] is not None
-            }
-            blooms = {
-                int(b): B.load_bloom(table.meta_dir, p)[0].tobytes()
-                for b, p in m.bloom_ptrs.items()
-                if int(b) in present
-            }
-            bblooms = spark.sparkContext.broadcast(blooms)
-            bdata = spark.sparkContext.broadcast(
-                {int(b) for b in set(m.files) if int(b) in present}
-            )
-            _bloom_bcasts += [bblooms, bdata]
-            _might = B.make_might_contain_udf(
-                bblooms, bdata,
-                int(m.bloom_conf["m_bits"]), int(m.bloom_conf["k"]),
-            )
-            # no false negatives: True for null keys / unbloomed buckets is
-            # merely conservative (routes to the fold)
-            might_col = F.when(F.col(key).isNull(), F.lit(True)).otherwise(
-                _might(
-                    F.col("_b"),
-                    F.xxhash64(F.col(key)),
-                    F.xxhash64(F.col(key), F.lit(1)),
-                )
-            )
-        stats = (
-            batch_full.withColumn("_might", might_col)
-            .groupBy("_b", F.col(key).isNull().alias("_nk"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("_deleted")).alias("d"),
-                F.max("_might").alias("might"),
-            )
-            .collect()
-        )
-        touched = sorted(r["_b"] for r in stats if not r["_nk"])
-        rows_in = int(sum(r["n"] for r in stats if not r["_nk"]))
-        rows_deleted = int(sum(r["d"] for r in stats if not r["_nk"]))
-        rows_null_key = int(sum(r["n"] for r in stats if r["_nk"]))
+        stats = _cow_prepass(m, batch_full, table.meta_dir)
+        live = {b: r for b, r in stats.items() if r["n"]}
+        touched = sorted(live)
+        rows_in = int(sum(r["n"] for r in live.values()))
+        rows_deleted = int(sum(r["d"] for r in live.values()))
+        rows_null_key = int(sum(r["nk"] for r in stats.values()))
         if rows_in == 0:
             return MergeResult(
                 False, m.version, 0, 0, 0, 0, rows_null_key=rows_null_key
@@ -928,56 +966,40 @@ def _merge_cow(
 
         # append-eligible: the bloom proved every batch key absent AND the
         # bucket hasn't accumulated too many GENERATIONS (≥ 8 folds anyway,
-        # bounding the read amplification the skipped folds defer). r6
-        # (r5 ADVICE): count distinct generation ids, not file entries — a
-        # fold that split a bucket into several files in one generation
-        # would otherwise trip the bound early and shrink the fast path's
-        # hit rate (matches table.read's dirty-bucket test).
+        # bounding the read amplification the skipped folds defer). Distinct
+        # generation ids, not file entries: a fold that split a bucket into
+        # several files in one generation must not trip the bound early
+        # (matches table.read's dirty-bucket test).
         append_set = {
-            r["_b"]
-            for r in stats
-            if not r["_nk"] and not r["might"]
-            and len({
-                e.get("v", 0) for e in m.files.get(str(r["_b"]), [])
-            }) < 8
+            b for b in touched
+            if not live[b]["might"]
+            and len({e.get("v", 0) for e in m.files.get(str(b), [])}) < 8
         } if bloom_fast_path and m.bloom_conf else set()
         fold_buckets = [b for b in touched if b not in append_set]
 
-        batch_clean = batch_full.where(F.col(key).isNotNull()).select(
-            *full_cols, "_b"
-        )
-        parts = []
-        if fold_buckets or not append_set:
-            fold_in = (
-                batch_clean
-                if not append_set
-                else batch_clean.where(F.col("_b").isin(fold_buckets))
-            )
-            if fold_buckets:
-                old = table.read(
-                    spark, buckets=fold_buckets, include_internal=True
-                ).withColumn("_b", bucket_expr(key, m.n_buckets))
-                fold_in = fold_in.unionByName(old.select(*full_cols, "_b"))
-            parts.append(fold_in)
-        if append_set:
-            # skipped buckets never read base data: their rows just reduce
-            # within the batch and append as a fresh generation
-            parts.append(
-                batch_clean.where(F.col("_b").isin(sorted(append_set)))
-            )
+        # skipped buckets never read base data: their batch rows just reduce
+        # and append as a fresh generation
+        rows = batch_full.where(F.col(key).isNotNull()).select(*full_cols, "_b")
+        if fold_buckets:
+            old = table.read(
+                spark, buckets=fold_buckets, include_internal=True
+            ).withColumn("_b", bucket_expr(key, m.n_buckets))
+            rows = rows.unionByName(old.select(*full_cols, "_b"))
+        # ONE exchange: HashPartitioning(_b) already satisfies the
+        # (_b, key) grouping, so the LWW reduce runs in the write stage. A
+        # map-side combine ahead of a second shuffle buys little here: the
+        # batch arrives deduped and base generations hold few repeats.
         merged = lww_dedup(
-            parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]),
-            key_cols=key,
+            rows.repartition(max(len(touched), 1), F.col("_b")),
+            key_cols=["_b", key],
             order_cols=[m.lww_major, "_lsn"],
-            salt_buckets=salt_buckets,
         )
         new_version = m.version + 1
         staging = table.snapshot_staging_dir(new_version)
         _ensure_stats_friendly_writes(spark)
         (
             # key-sorted for parquet min/max skipping (see compact_buckets)
-            merged.repartition(max(len(touched), 1), F.col("_b"))
-            .sortWithinPartitions(key)
+            merged.sortWithinPartitions(key)
             .write.mode("overwrite")
             .partitionBy("_b")
             .parquet(staging)
@@ -996,20 +1018,9 @@ def _merge_cow(
                 for b in touched
             }
         )
-        nf_fold = {
-            b: e for b, e in new_files.items() if int(b) not in append_set
-        }
-        nf_append = {
-            b: e for b, e in new_files.items() if int(b) in append_set
-        }
-        bloom_updates = {
-            **_bloom_ptr_updates(
-                spark, table, m, nf_fold, new_version, mode="rebuild"
-            ),
-            **_bloom_ptr_updates(
-                spark, table, m, nf_append, new_version, mode="union"
-            ),
-        }
+        bloom_updates = _cow_bloom_updates(
+            spark, table, m, live, new_files, append_set, new_version
+        )
         bucket_bytes = dict(m.bucket_bytes)
         for b in touched:
             add = _bytes_of(new_files.get(str(b), []))
@@ -1058,13 +1069,49 @@ def _merge_cow(
         )
     finally:
         batch_full.unpersist()
-        for bc in _bloom_bcasts:
-            # r6 (r5 ADVICE): broadcasts otherwise accumulate over a long
-            # replay — one pair per slice, each potentially bloom-sized
-            try:
-                bc.destroy()
-            except Exception:
-                pass
+
+
+def _cow_bloom_updates(
+    spark: SparkSession,
+    table: LakeTable,
+    m: Manifest,
+    live: dict,
+    new_files: dict[str, list[dict]],
+    append_set: set[int],
+    version: int,
+) -> dict[str, str]:
+    """Bloom side files of a copy-on-write commit, from the pre-pass's
+    (old | batch) bits — {} when blooms aren't enabled. A bucket whose old
+    bloom was complete (a pointer, or no prior data) writes those bits with
+    key count = rows written (+ the old count for an append). A bucket with
+    data but no pointer, or whose written row count is unknown, falls back
+    to :func:`_bloom_ptr_updates` over the files just written."""
+    if not m.bloom_conf:
+        return {}
+    from embulk_input_marketo_spark.lake import bloom as B
+
+    m_bits, k = int(m.bloom_conf["m_bits"]), int(m.bloom_conf["k"])
+    updates: dict[str, str] = {}
+    fallback: dict[str, dict[str, list[dict]]] = {"rebuild": {}, "union": {}}
+    for b, r in live.items():
+        sb = str(b)
+        entries = new_files.get(sb, [])
+        rows = [e.get("rows") for e in entries]
+        if entries and None not in rows and (
+            sb in m.bloom_ptrs or sb not in m.files
+        ):
+            n = sum(rows) + (int(r["n_old"]) if b in append_set else 0)
+            updates[sb] = B.write_bloom_side(
+                table.meta_dir, version, sb, bytes(r["bloom"]), m_bits, k, n
+            )
+        elif entries:
+            fallback["union" if b in append_set else "rebuild"][sb] = entries
+    for mode, nf in fallback.items():
+        if nf:
+            updates.update(
+                _bloom_ptr_updates(spark, table, m, nf, version, mode=mode)
+            )
+    return updates
 
 
 def _zorder_sort_key(df, zorder_by: list[str]):
@@ -1441,7 +1488,29 @@ def rehash_buckets(
     return new_version
 
 
-def _file_key_stats(path: str, col: str):
+def _column_min_max(md, col: str):
+    """(min, max) of ``col`` over every row group of a parquet footer
+    (``pyarrow`` FileMetaData), or None when any row group lacks stats."""
+    mins: list = []
+    maxs: list = []
+    for rg in range(md.num_row_groups):
+        rgm = md.row_group(rg)
+        st = None
+        for ci in range(rgm.num_columns):
+            c = rgm.column(ci)
+            if c.path_in_schema == col:
+                st = c.statistics
+                break
+        if st is None or not st.has_min_max:
+            return None
+        mins.append(st.min)
+        maxs.append(st.max)
+    if not mins:
+        return None
+    return min(mins), max(maxs)
+
+
+def _file_key_stats(md, col: str):
     """Per-FILE (min, max) of the merge key, read from the parquet footer
     the commit just wrote — Iceberg's write-time column stats. Parquet
     writers may TRUNCATE string stats, but the spec keeps them conservative
@@ -1450,26 +1519,10 @@ def _file_key_stats(path: str, col: str):
     never skip a file that holds the key. Returns None (no stats recorded)
     on any doubt — missing stats merely cost the skip."""
     try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        mins: list = []
-        maxs: list = []
-        for rg in range(md.num_row_groups):
-            rgm = md.row_group(rg)
-            st = None
-            for ci in range(rgm.num_columns):
-                c = rgm.column(ci)
-                if c.path_in_schema == col:
-                    st = c.statistics
-                    break
-            if st is None or not st.has_min_max:
-                return None
-            mins.append(st.min)
-            maxs.append(st.max)
-        if not mins:
+        got = _column_min_max(md, col)
+        if got is None:
             return None
-        lo, hi = min(mins), max(maxs)
+        lo, hi = got
         if isinstance(lo, bytes) or not isinstance(lo, (str, int, float)):
             return None  # keep the manifest JSON-portable
         return lo, hi
@@ -1495,33 +1548,16 @@ def major_to_micros(v) -> int | None:
     return int(v)
 
 
-def _file_major_stats(path: str, col: str):
+def _file_major_stats(md, col: str):
     """Per-file (min, max) of the lww-major column as epoch micros — the
     time axis of a CDC web table ("pages crawled in window X"). Same
     conservative-footer discipline as :func:`_file_key_stats`; None on any
     doubt."""
     try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        mins: list = []
-        maxs: list = []
-        for rg in range(md.num_row_groups):
-            rgm = md.row_group(rg)
-            st = None
-            for ci in range(rgm.num_columns):
-                c = rgm.column(ci)
-                if c.path_in_schema == col:
-                    st = c.statistics
-                    break
-            if st is None or not st.has_min_max:
-                return None
-            mins.append(st.min)
-            maxs.append(st.max)
-        if not mins:
+        got = _column_min_max(md, col)
+        if got is None:
             return None
-        lo = major_to_micros(min(mins))
-        hi = major_to_micros(max(maxs))
+        lo, hi = major_to_micros(got[0]), major_to_micros(got[1])
         if lo is None or hi is None:
             return None
         return lo, hi
@@ -1543,8 +1579,9 @@ def _enumerate_bucket_files(
     (``v``) — the read path uses ``v`` to tell single-generation (clean)
     buckets from multi-generation (merge-on-read) ones.
 
-    ``stats_col``: record the column's per-file (kmin, kmax) from the
-    parquet footers this commit just wrote — O(files in THIS commit)
+    Entries record their row count (``rows``) from the parquet footer;
+    ``stats_col``: also record the column's per-file (kmin, kmax) from the
+    footers this commit just wrote — O(files in THIS commit)
     footer reads, never O(table); the point-lookup path skips whole files
     on them without opening anything (on a cluster this loop belongs in
     the write tasks — the fsio seam again).
@@ -1558,12 +1595,19 @@ def _enumerate_bucket_files(
             "path": p, "sv": sv, "v": version, "reduced": reduced,
             "bytes": fsio.file_size(p),
         }
+        try:
+            import pyarrow.parquet as pq
+
+            md = pq.ParquetFile(p).metadata
+        except Exception:
+            return e  # no footer: no stats, no row count — both optional
+        e["rows"] = md.num_rows
         if stats_col is not None:
-            stats = _file_key_stats(p, stats_col)
+            stats = _file_key_stats(md, stats_col)
             if stats is not None:
                 e["kmin"], e["kmax"] = stats
         if major_col is not None:
-            tstats = _file_major_stats(p, major_col)
+            tstats = _file_major_stats(md, major_col)
             if tstats is not None:
                 e["tmin"], e["tmax"] = tstats
         return e

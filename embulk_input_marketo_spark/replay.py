@@ -58,7 +58,6 @@ def replay(
     registry: SchemaRegistry | None = None,
     max_batches: int | None = None,
     on_batch: Callable[[MergeResult], Any] | None = None,
-    prefetch: bool = False,
     pipeline: bool | str = False,
     bloom_fast_path: bool = False,
 ) -> ReplayReport:
@@ -69,20 +68,6 @@ def replay(
     - The window splits into ≤``batch_span`` half-open slices (C2); each is
       LWW-deduped, schema-reconciled and merged with an idempotent batch_id —
       killing the process anywhere and re-running converges (C3/C7).
-    - ``prefetch`` (default OFF — measured and rejected at bench shape):
-      pipeline slice k+1's changelog SCAN under slice k's merge (persist +
-      materialize on a background thread, kicked shortly AFTER the merge
-      job is submitted so FIFO keeps the merge's priority). Measured
-      same-window A/B at 8 cores / 10M events: occupancy ROSE 0.80→0.88
-      but throughput FELL ~330k→~280k ev/s — on local tmpfs the scan is
-      already a memcpy, so the cache materialization adds a full extra
-      copy of the decoded slice (html included) to a memory-bandwidth
-      budget the write path needs more. The knob stays because the
-      tradeoff inverts when the scan is REMOTE (S3/HDFS object reads
-      under compute is the classic ingest pipeline overlap); the cache
-      holds only RAW slice rows, so it is valid under schema
-      reconcile/renames (both apply downstream) and drops as each slice
-      commits.
     - ``pipeline`` (mor only, ignored when a ``registry`` is given):
       write-ahead replay — slice k's data is staged to a private dir
       (lake/merge.stage_merge), the commit publishes strictly in slice order
@@ -90,9 +75,9 @@ def replay(
       (commit_staged_merge). ``True`` overlaps the COMMIT bookkeeping only
       (never two cluster jobs at once); ``"full"`` additionally overlaps
       adjacent slices' write jobs — see :func:`_replay_pipelined` for the
-      measured tradeoff. Unlike ``prefetch`` this adds NO extra copy of the
-      slice — it reorders already-necessary work into idle the commit gap
-      (and, for "full", stage straggler tails) leaves: measured 10-15% of
+      measured tradeoff. This adds NO extra copy of the slice — it
+      reorders already-necessary work into idle the commit gap (and, for
+      "full", stage straggler tails) leaves: measured 10-15% of
       replay wall at 8 cores, and pure scaling loss — the same absolute
       driver latency hides behind 4x longer compute at a quarter the cores.
       Crash/idempotence semantics are unchanged — an uncommitted staged dir
@@ -104,9 +89,6 @@ def replay(
       (``lake/merge.merge_batch``). The insert-heavy crawl-frontier knob;
       a no-op for mor (mor never reads base data on merge).
     """
-    import threading
-    import time as _time
-
     hwm = resume_hwm(table)
     row = changelog.agg(F.max("lsn").alias("mx")).collect()[0]
     max_lsn = row["mx"] if row["mx"] is not None else -1
@@ -129,47 +111,23 @@ def replay(
             depth="full" if pipeline == "full" else "commit",
         )
 
-    prefetched: dict[tuple[int, int], DataFrame] = {}
-
-    def _kick_prefetch(nxt: tuple[int, int], delay: float = 2.0) -> None:
-        # persist, then materialize AFTER a short delay: the current slice's
-        # merge job must reach the scheduler first (FIFO gives the earlier
-        # job priority whenever it has pending tasks, so the prefetch only
-        # ever fills slots the merge releases — gaps and straggler tails)
-        df = bounded_scan(changelog, *nxt).persist()
-        prefetched[nxt] = df
-
-        def run() -> None:
-            _time.sleep(delay)
-            try:
-                df.count()
-            except Exception:
-                pass  # cancelled/failed prefetch degrades to a direct scan
-
-        threading.Thread(target=run, daemon=True).start()
-
     report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
-    for i, (lo, hi) in enumerate(slices):
+    for lo, hi in slices:
         if max_batches is not None and len(report.batches) >= max_batches:
             break
         if registry is not None:
             registry.reconcile(table, up_to_lsn=hi)
 
-        window_df = prefetched.get((lo, hi)) or bounded_scan(changelog, lo, hi)
-        will_process_next = (
-            prefetch
-            and i + 1 < len(slices)
-            and (max_batches is None or len(report.batches) + 1 < max_batches)
-        )
-        if will_process_next and slices[i + 1] not in prefetched:
-            _kick_prefetch(slices[i + 1])
+        window_df = bounded_scan(changelog, lo, hi)
         m = table.manifest()
         batch, derive = _project_slice(
             window_df, m, extract_text_from_html, mode
         )
         if mode == "cow":
             # CoW folds base data every commit — pre-reduce to one row per
-            # key first so the union the merge reduces over stays small
+            # key first so the union the merge reduces over stays small.
+            # This is the only place salt_buckets acts on a cow replay: the
+            # fold itself reduces in its one bucket exchange, unsalted
             batch = lww_dedup(
                 batch,
                 key_cols=m.key_col,
@@ -193,14 +151,10 @@ def replay(
             bloom_fast_path=bloom_fast_path,
         )
         report.batches.append(result)
-        if (lo, hi) in prefetched:
-            prefetched.pop((lo, hi)).unpersist(blocking=False)
         if result.applied:
             report.end_hwm = hi
         if on_batch:
             on_batch(result)
-    for df in prefetched.values():  # early exits (max_batches) leak nothing
-        df.unpersist(blocking=False)
     return report
 
 
