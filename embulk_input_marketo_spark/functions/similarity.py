@@ -302,9 +302,15 @@ def _assign_cells_np(
 
     from pyspark.sql import types as T
 
-    out_fields = df.schema.fields + [T.StructField(out_col, cid_type, True)]
+    # an existing out_col is replaced in place, as withColumn does on the
+    # JVM path (pdf.assign below replaces it in place too)
+    out_field = T.StructField(out_col, cid_type, True)
+    out_fields = [
+        out_field if f.name == out_col else f for f in df.schema.fields
+    ]
+    if out_col not in df.columns:
+        out_fields.append(out_field)
     out_schema = T.StructType(out_fields)
-    cols = [f.name for f in df.schema.fields]
 
     # sort by cell_id so "ties -> larger cell id" is the highest column,
     # matching sort_array(collect_list(struct(cell_id, centroid)))'s order

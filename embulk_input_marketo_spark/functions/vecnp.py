@@ -88,8 +88,11 @@ def round_half_up_array(x: np.ndarray, decimals: int = 6) -> np.ndarray:
     """Vectorized :func:`round_half_up`. The floor formula
     ``sign(x) * floor(|x|*10^d + 0.5) / 10^d`` equals the exact
     string-decimal HALF_UP everywhere except within a guard band of a
-    .5·10^-d boundary (double scaling error + shortest-repr displacement
-    are both ≤ ~1e-10 relative); banded values take the exact path."""
+    .5·10^-d boundary; banded values take the exact path. The double
+    scaling error and the shortest-repr displacement grow with magnitude
+    (a few ulps of ``|x|*10^d``), so the band does too: ``1e-6`` or
+    ``1e-12`` of ``|x|*10^d``, whichever is wider. Past ``|x|*10^d`` ≈ 5e11
+    every value is banded and takes the exact path."""
     scale = 10.0 ** decimals
     ax = np.abs(x)
     scaled = ax * scale
@@ -97,7 +100,8 @@ def round_half_up_array(x: np.ndarray, decimals: int = 6) -> np.ndarray:
         out = np.copysign(np.floor(scaled + 0.5) / scale, x)
         out[out == 0.0] = 0.0  # BigDecimal has no signed zero (see above)
         frac = scaled - np.floor(scaled)
-        suspicious = ~np.isfinite(x) | (np.abs(frac - 0.5) < 1e-6)
+        band = np.maximum(1e-6, scaled * 1e-12)
+        suspicious = ~np.isfinite(x) | (np.abs(frac - 0.5) < band)
     if suspicious.any():
         flat = out.reshape(-1)
         xf = np.asarray(x, dtype=np.float64).reshape(-1)

@@ -399,7 +399,7 @@ def merge_batch(
     derive: dict[str, Any] | None = None,
     bloom_fast_path: bool = False,
 ) -> MergeResult:
-    """Apply a LWW-deduped CDC batch (one row per key) to the table.
+    """Apply a CDC batch to the table, last writer wins per key.
 
     ``batch`` must carry the table's current user-schema columns plus
     ``op_col`` ('I'/'U'/'D') and ``lsn_col`` (unique monotone order minor).
@@ -421,21 +421,25 @@ def merge_batch(
     them (round-1 ADVICE: a null bucket partition dir aborted the commit
     mid-write).
 
-    mode='mor' (merge-on-read, default): the deduped batch APPENDS delta
+    mode='mor' (merge-on-read, default): the batch APPENDS delta
     files to its buckets — per-commit cost is O(batch), one shuffle, no read
     of base data. Buckets whose file count reaches ``compact_threshold`` are
     folded (old generations + batch LWW-reduced and rewritten) in the SAME
     commit, bounding read amplification at ``compact_threshold`` generations.
     mode='cow' (copy-on-write): every touched bucket is folded each commit —
-    cheapest reads, O(touched-bucket data) writes.
+    cheapest reads, O(touched-bucket data) writes. The batch may carry
+    several rows per key; the fold reduces them with the base rows, and
+    ``rows_in``/``rows_deleted`` count the LWW winners (one per key). The
+    batch is evaluated twice (a narrow counting pre-pass, then the write),
+    so it must be deterministic: a batch whose plan is not raises
+    ValueError before anything is written.
 
     salt_buckets: optional extra pre-split of hot keys in the mor
     ``pre_reduce`` and its compactions. Spark's map-side partial aggregation
     already caps per-key reducer input at one row per map partition, so the
     salt phase (an extra shuffle) is only worth it for pathological
     single-key skew; default off. cow ignores it: its fold reduces in the
-    write's one bucket exchange (for cow, ``replay`` applies it only to
-    the batch pre-dedup).
+    write's one bucket exchange.
 
     derive: optional {column: Column} of DERIVED schema columns computed
     AFTER the bucket exchange, in the write tasks — the column rides the
@@ -868,22 +872,39 @@ def commit_staged_merge(
 
 
 def _cow_prepass(m: Manifest, batch_full: DataFrame, meta_dir: str) -> dict:
-    """The copy-on-write commit's one pre-pass job over the (persisted)
-    batch → {bucket: row}. Per bucket: ``n`` rows with a key, ``d`` of them
-    deletes, ``nk`` null-key rows; on bloom tables also ``might`` (the old
-    bloom may hold a batch key), ``bloom`` (old bits | the batch's keys)
-    and ``n_old`` (the old bloom's key count).
+    """The copy-on-write commit's pre-pass over the batch → {bucket: row}.
+    Per bucket: ``n`` LWW winners (distinct keys), ``d`` of them deletes,
+    ``nk`` null-key rows; on bloom tables also ``might`` (the old bloom may
+    hold a batch key), ``bloom`` (old bits | the batch's keys) and ``n_old``
+    (the old bloom's key count).
+
+    The batch may carry several rows per key. One JVM aggregate picks each
+    key's winner by ``max_by(struct(major, _lsn))``, the order the fold
+    applies, behind the one exchange that groups rows by bucket. The scan
+    is narrow — bucket, key, LWW order and tombstone flag — so payload
+    columns (and any UDF over them) are pruned out of it.
 
     Each bloom group loads only its own bucket's bloom, by the pointer name
     shipped in the closure — the driver never loads or ships bloom bytes.
-    Tables without blooms take a JVM-only aggregate."""
-    key = m.key_col
+    Tables without blooms count in the JVM alone."""
+    key, major = m.key_col, m.lww_major
     nk = F.col(key).isNull()
+    # HashPartitioning(_b) satisfies this grouping and the per-bucket one
+    # after it: one exchange
+    per_key = (
+        batch_full.select("_b", key, major, "_lsn", "_deleted")
+        .repartition("_b")
+        .groupBy("_b", key)
+        .agg(
+            F.max_by("_deleted", F.struct(major, "_lsn")).alias("_del"),
+            F.count("*").alias("_c"),
+        )
+    )
     if not m.bloom_conf:
-        rows = batch_full.groupBy("_b").agg(
+        rows = per_key.groupBy("_b").agg(
             F.count_if(~nk).alias("n"),
-            F.count_if(F.col("_deleted") & ~nk).alias("d"),
-            F.count_if(nk).alias("nk"),
+            F.count_if(F.col("_del") & ~nk).alias("d"),
+            F.sum(F.when(nk, F.col("_c")).otherwise(0)).alias("nk"),
         ).collect()
         return {int(r["_b"]): r for r in rows}
 
@@ -910,15 +931,15 @@ def _cow_prepass(m: Manifest, batch_full: DataFrame, meta_dir: str) -> dict:
         return pd.DataFrame({
             "_b": [int(b)],
             "n": [int(keyed.sum())],
-            "d": [int((pdf["_deleted"].to_numpy() & keyed).sum())],
-            "nk": [int(null.sum())],
+            "d": [int((pdf["_del"].to_numpy() & keyed).sum())],
+            "nk": [int(pdf["_c"].to_numpy()[null].sum())],
             "might": [might],
             "bloom": [bits],
             "n_old": [n_old],
         })
 
     rows = (
-        batch_full.select("_b", nk.alias("_nk"), "_deleted", *B.hash_cols(key))
+        per_key.select("_b", nk.alias("_nk"), "_del", "_c", *B.hash_cols(key))
         .groupBy("_b")
         .applyInPandas(
             per_bucket,
@@ -941,134 +962,145 @@ def _merge_cow(
     (see merge_batch docstring). Null-key rows are counted by the pre-pass
     and dropped (see merge_batch docstring for the policy).
 
-    Two passes: the pre-pass (:func:`_cow_prepass`) and the write, whose
-    one exchange places rows by bucket and reduces them per (bucket, key)
-    in the same stage. Blooms are never rebuilt from the written files: a
-    touched bucket's new bloom is its old bloom | the batch's keys, which
-    equals a rebuild because a complete bloom is always bits(the bucket's
-    key set) and the fold keeps every key (see lake/bloom.py). The key
-    count is the rows written (from the parquet footers), plus the old
-    count for an append. A bucket with data but no bloom gets one rebuilt
-    from its folded files."""
+    Two passes over the batch, which may carry several rows per key: the
+    pre-pass (:func:`_cow_prepass`), which counts LWW winners per bucket,
+    and the write, whose one exchange places the batch and base rows by
+    bucket and reduces them per (bucket, key) in the same stage. Nothing is
+    cached in between, so the batch is evaluated twice and must be
+    deterministic; a batch whose plan is not is rejected.
+
+    Blooms are never rebuilt from the written files: a touched bucket's new
+    bloom is its old bloom | the batch's keys, which equals a rebuild
+    because a complete bloom is always bits(the bucket's key set) and the
+    fold keeps every key (see lake/bloom.py). The key count is the rows
+    written (from the parquet footers), plus the old count for an append. A
+    bucket with data but no bloom gets one rebuilt from its folded files."""
     key = m.key_col
-    batch_full.persist()
-    try:
-        stats = _cow_prepass(m, batch_full, table.meta_dir)
-        live = {b: r for b, r in stats.items() if r["n"]}
-        touched = sorted(live)
-        rows_in = int(sum(r["n"] for r in live.values()))
-        rows_deleted = int(sum(r["d"] for r in live.values()))
-        rows_null_key = int(sum(r["nk"] for r in stats.values()))
-        if rows_in == 0:
-            return MergeResult(
-                False, m.version, 0, 0, 0, 0, rows_null_key=rows_null_key
-            )
-
-        # append-eligible: the bloom proved every batch key absent AND the
-        # bucket hasn't accumulated too many GENERATIONS (≥ 8 folds anyway,
-        # bounding the read amplification the skipped folds defer). Distinct
-        # generation ids, not file entries: a fold that split a bucket into
-        # several files in one generation must not trip the bound early
-        # (matches table.read's dirty-bucket test).
-        append_set = {
-            b for b in touched
-            if not live[b]["might"]
-            and len({e.get("v", 0) for e in m.files.get(str(b), [])}) < 8
-        } if bloom_fast_path and m.bloom_conf else set()
-        fold_buckets = [b for b in touched if b not in append_set]
-
-        # skipped buckets never read base data: their batch rows just reduce
-        # and append as a fresh generation
-        rows = batch_full.where(F.col(key).isNotNull()).select(*full_cols, "_b")
-        if fold_buckets:
-            old = table.read(
-                spark, buckets=fold_buckets, include_internal=True
-            ).withColumn("_b", bucket_expr(key, m.n_buckets))
-            rows = rows.unionByName(old.select(*full_cols, "_b"))
-        # ONE exchange: HashPartitioning(_b) already satisfies the
-        # (_b, key) grouping, so the LWW reduce runs in the write stage. A
-        # map-side combine ahead of a second shuffle buys little here: the
-        # batch arrives deduped and base generations hold few repeats.
-        merged = lww_dedup(
-            rows.repartition(max(len(touched), 1), F.col("_b")),
-            key_cols=["_b", key],
-            order_cols=[m.lww_major, "_lsn"],
+    if not batch_full._jdf.queryExecution().analyzed().deterministic():
+        # two evaluations of such a plan can disagree: the write could store
+        # a key the pre-pass never added to the bloom, a false negative
+        raise ValueError(
+            "cow merge: the batch plan is non-deterministic, and the commit "
+            "evaluates it twice; materialize it first (e.g. "
+            "DataFrame.localCheckpoint())"
         )
-        new_version = m.version + 1
-        staging = table.snapshot_staging_dir(new_version)
-        _ensure_stats_friendly_writes(spark)
-        (
-            # key-sorted for parquet min/max skipping (see compact_buckets)
-            merged.sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .partitionBy("_b")
-            .parquet(staging)
-        )
-        new_files = _enumerate_bucket_files(
-            staging, m.schema_version, new_version, reduced=True,
-            stats_col=m.key_col, major_col=m.lww_major,
-        )
-        files = m.files.with_updates(
-            {
-                str(b): (
-                    list(m.files.get(str(b), [])) + new_files.get(str(b), [])
-                    if b in append_set
-                    else new_files.get(str(b), [])
-                )
-                for b in touched
-            }
-        )
-        bloom_updates = _cow_bloom_updates(
-            spark, table, m, live, new_files, append_set, new_version
-        )
-        bucket_bytes = dict(m.bucket_bytes)
-        for b in touched:
-            add = _bytes_of(new_files.get(str(b), []))
-            bucket_bytes[str(b)] = (
-                bucket_bytes.get(str(b), 0) + add if b in append_set else add
-            )
-        applied, ckpt = _commit_bookkeeping(m, batch_id, checkpoint, window, channel)
-        nm = Manifest(
-            version=new_version,
-            parent=m.version,
-            key_col=m.key_col,
-            lww_major=m.lww_major,
-            n_buckets=m.n_buckets,
-            schema_version=m.schema_version,
-            schemas=m.schemas,
-            renames=m.renames,
-            files=files,
-            applied_batches=applied,
-            checkpoint=ckpt,
-            summary={
-                "operation": "merge",
-                "batch_id": batch_id,
-                "rows_in": rows_in,
-                "rows_upserted": rows_in - rows_deleted,
-                "rows_deleted": rows_deleted,
-                "rows_null_key": rows_null_key,
-                "touched_buckets": len(touched),
-                "compacted_buckets": len(fold_buckets),
-                "bloom_skipped_buckets": len(append_set),
-                "mode": "cow",
-                "lineage": lineage or {},
-            },
-            committed_at=time.time(),
-            bloom_conf=dict(m.bloom_conf),
-            bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
-            bucket_bytes=bucket_bytes,
-        )
-        if publish:
-            table.commit(nm, staging)
-        else:
-            table.write_staged(batch_id, nm)
+    stats = _cow_prepass(m, batch_full, table.meta_dir)
+    live = {b: r for b, r in stats.items() if r["n"]}
+    touched = sorted(live)
+    rows_in = int(sum(r["n"] for r in live.values()))
+    rows_deleted = int(sum(r["d"] for r in live.values()))
+    rows_null_key = int(sum(r["nk"] for r in stats.values()))
+    if rows_in == 0:
         return MergeResult(
-            True, new_version, rows_in, rows_in - rows_deleted, rows_deleted,
-            len(touched), compacted_buckets=len(fold_buckets),
-            rows_null_key=rows_null_key, staged=not publish,
+            False, m.version, 0, 0, 0, 0, rows_null_key=rows_null_key
         )
-    finally:
-        batch_full.unpersist()
+
+    # append-eligible: the bloom proved every batch key absent AND the
+    # bucket hasn't accumulated too many GENERATIONS (≥ 8 folds anyway,
+    # bounding the read amplification the skipped folds defer). Distinct
+    # generation ids, not file entries: a fold that split a bucket into
+    # several files in one generation must not trip the bound early
+    # (matches table.read's dirty-bucket test).
+    append_set = {
+        b for b in touched
+        if not live[b]["might"]
+        and len({e.get("v", 0) for e in m.files.get(str(b), [])}) < 8
+    } if bloom_fast_path and m.bloom_conf else set()
+    fold_buckets = [b for b in touched if b not in append_set]
+
+    # skipped buckets never read base data: their batch rows just reduce
+    # and append as a fresh generation
+    rows = batch_full.where(F.col(key).isNotNull()).select(*full_cols, "_b")
+    if fold_buckets:
+        old = table.read(
+            spark, buckets=fold_buckets, include_internal=True
+        ).withColumn("_b", bucket_expr(key, m.n_buckets))
+        rows = rows.unionByName(old.select(*full_cols, "_b"))
+    # ONE exchange: HashPartitioning(_b) already satisfies the
+    # (_b, key) grouping, so the LWW reduce of batch and base rows runs in
+    # the write stage, with no map-side combine. Raw batch rows ride it: a
+    # perfbench trickle_reads slice is 1,000 rows over ~320 keys (3.2 per
+    # key) against ~1,450 base rows, so the exchange moves ~1.4x the rows
+    # of a pre-deduped batch. Its map stage took ~25 ms longer per call on
+    # 4 cores, less than the extra job a combine ahead of it costs.
+    merged = lww_dedup(
+        rows.repartition(max(len(touched), 1), F.col("_b")),
+        key_cols=["_b", key],
+        order_cols=[m.lww_major, "_lsn"],
+    )
+    new_version = m.version + 1
+    staging = table.snapshot_staging_dir(new_version)
+    _ensure_stats_friendly_writes(spark)
+    (
+        # key-sorted for parquet min/max skipping (see compact_buckets)
+        merged.sortWithinPartitions(key)
+        .write.mode("overwrite")
+        .partitionBy("_b")
+        .parquet(staging)
+    )
+    new_files = _enumerate_bucket_files(
+        staging, m.schema_version, new_version, reduced=True,
+        stats_col=m.key_col, major_col=m.lww_major,
+    )
+    files = m.files.with_updates(
+        {
+            str(b): (
+                list(m.files.get(str(b), [])) + new_files.get(str(b), [])
+                if b in append_set
+                else new_files.get(str(b), [])
+            )
+            for b in touched
+        }
+    )
+    bloom_updates = _cow_bloom_updates(
+        spark, table, m, live, new_files, append_set, new_version
+    )
+    bucket_bytes = dict(m.bucket_bytes)
+    for b in touched:
+        add = _bytes_of(new_files.get(str(b), []))
+        bucket_bytes[str(b)] = (
+            bucket_bytes.get(str(b), 0) + add if b in append_set else add
+        )
+    applied, ckpt = _commit_bookkeeping(m, batch_id, checkpoint, window, channel)
+    nm = Manifest(
+        version=new_version,
+        parent=m.version,
+        key_col=m.key_col,
+        lww_major=m.lww_major,
+        n_buckets=m.n_buckets,
+        schema_version=m.schema_version,
+        schemas=m.schemas,
+        renames=m.renames,
+        files=files,
+        applied_batches=applied,
+        checkpoint=ckpt,
+        summary={
+            "operation": "merge",
+            "batch_id": batch_id,
+            "rows_in": rows_in,
+            "rows_upserted": rows_in - rows_deleted,
+            "rows_deleted": rows_deleted,
+            "rows_null_key": rows_null_key,
+            "touched_buckets": len(touched),
+            "compacted_buckets": len(fold_buckets),
+            "bloom_skipped_buckets": len(append_set),
+            "mode": "cow",
+            "lineage": lineage or {},
+        },
+        committed_at=time.time(),
+        bloom_conf=dict(m.bloom_conf),
+        bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
+        bucket_bytes=bucket_bytes,
+    )
+    if publish:
+        table.commit(nm, staging)
+    else:
+        table.write_staged(batch_id, nm)
+    return MergeResult(
+        True, new_version, rows_in, rows_in - rows_deleted, rows_deleted,
+        len(touched), compacted_buckets=len(fold_buckets),
+        rows_null_key=rows_null_key, staged=not publish,
+    )
 
 
 def _cow_bloom_updates(

@@ -1,5 +1,5 @@
-"""Replay orchestrator: changelog window → LWW dedup → schema reconcile →
-MERGE → atomic checkpoint advance.
+"""Replay orchestrator: changelog window → schema reconcile → LWW MERGE →
+atomic checkpoint advance.
 
 This is the Spark re-expression of the reference's transaction lifecycle
 (SURVEY.md §3.1): validate/plan window → discover schema → ingest → advance
@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from embulk_input_marketo_spark.checkpoint import batch_id_for, resume_hwm
 from embulk_input_marketo_spark.lake.merge import MergeResult, merge_batch
 from embulk_input_marketo_spark.lake.table import LakeTable
-from embulk_input_marketo_spark.operators.dedup import lww_dedup
 from embulk_input_marketo_spark.operators.windows import bounded_scan, slice_range
 from embulk_input_marketo_spark.registry import SchemaRegistry
 
@@ -64,10 +63,16 @@ def replay(
     """Replay the changelog into the table from the committed checkpoint.
 
     - The job-start snapshot of ``max(lsn)`` clamps the run (C1): events that
-      arrive mid-replay wait for the next run.
+      arrive mid-replay wait for the next run. It is taken once, before
+      slicing, by one exchange-free job (:func:`_max_lsn`).
     - The window splits into ≤``batch_span`` half-open slices (C2); each is
-      LWW-deduped, schema-reconciled and merged with an idempotent batch_id —
-      killing the process anywhere and re-running converges (C3/C7).
+      schema-reconciled and merged with an idempotent batch_id — killing the
+      process anywhere and re-running converges (C3/C7). Slices reach the
+      merge raw, several rows per key included: mor appends them and cow
+      LWW-reduces them with the base rows in its fold
+      (``lake/merge.merge_batch``).
+    - ``salt_buckets`` acts on mor only (its compactions); the cow fold
+      reduces in its one bucket exchange, unsalted.
     - ``pipeline`` (mor only, ignored when a ``registry`` is given):
       write-ahead replay — slice k's data is staged to a private dir
       (lake/merge.stage_merge), the commit publishes strictly in slice order
@@ -90,8 +95,7 @@ def replay(
       a no-op for mor (mor never reads base data on merge).
     """
     hwm = resume_hwm(table)
-    row = changelog.agg(F.max("lsn").alias("mx")).collect()[0]
-    max_lsn = row["mx"] if row["mx"] is not None else -1
+    max_lsn = _max_lsn(changelog)
     if max_lsn <= hwm:
         # skip-batch guard (C7): nothing new, keep state
         return ReplayReport(start_hwm=hwm, end_hwm=hwm)
@@ -123,19 +127,9 @@ def replay(
         batch, derive = _project_slice(
             window_df, m, extract_text_from_html, mode
         )
-        if mode == "cow":
-            # CoW folds base data every commit — pre-reduce to one row per
-            # key first so the union the merge reduces over stays small.
-            # This is the only place salt_buckets acts on a cow replay: the
-            # fold itself reduces in its one bucket exchange, unsalted
-            batch = lww_dedup(
-                batch,
-                key_cols=m.key_col,
-                order_cols=[m.lww_major, "_lsn"],
-                salt_buckets=salt_buckets,
-            )
-        # mor: append raw (LSM-style); the threshold compaction + read-time
-        # reduce own the dedup work, amortized and parallel
+        # both modes hand the merge raw slice rows. mor appends them
+        # (LSM-style; compaction and the read-time reduce own the dedup);
+        # cow reduces them with the base rows in its fold's one exchange
         result = merge_batch(
             spark,
             table,
@@ -156,6 +150,21 @@ def replay(
         if on_batch:
             on_batch(result)
     return report
+
+
+def _max_lsn(changelog: DataFrame) -> int:
+    """The job-start snapshot: the log's largest non-null lsn, or -1 for an
+    empty or all-null log. A per-partition top-1 (``TakeOrderedAndProject``)
+    — one job and no exchange, where ``agg(max)`` runs a partial-aggregate
+    stage and a final stage."""
+    rows = (
+        changelog.select("lsn")
+        .where(F.col("lsn").isNotNull())
+        .orderBy(F.col("lsn").desc())
+        .limit(1)
+        .collect()
+    )
+    return rows[0]["lsn"] if rows else -1
 
 
 def _project_slice(

@@ -1,15 +1,18 @@
-"""Copy-on-write commit shape (lake/merge._merge_cow): one pre-pass job over
-the batch, blooms from the batch instead of a rebuild over the written
+"""Copy-on-write commit shape (lake/merge._merge_cow): one pre-pass over
+the raw batch, blooms from the batch instead of a rebuild over the written
 files, one exchange in the fold write.
 
 - The pre-pass reports the same counts the commit always reported, on
-  tables with and without blooms, including the no-op results.
+  tables with and without blooms, including the no-op results. A cow
+  replay, whose slices reach the merge with several rows per key, reports
+  the counts of the slice's LWW winners and writes the oracle state.
 - Every bloom a cow commit writes equals ``build_bloom_deltas`` over the
   bucket's live files, in bits and key count (fold, bloom-skip append,
   first write into an empty bucket, and the rebuild fallback for a bucket
   with data but no bloom).
-- One cow merge on a trickle-shaped bloom table runs a pinned number of
-  Spark jobs, its write plan has one exchange above the union, and the
+- One cow replay on a trickle-shaped bloom table runs a pinned number of
+  Spark jobs, its snapshot plan has no exchange, its pre-pass scans no
+  payload column, its write plan has one exchange above the union, and the
   driver loads no bloom.
 """
 
@@ -26,9 +29,11 @@ from pyspark.sql import types as T
 import embulk_input_marketo_spark.lake.merge as merge_mod
 import embulk_input_marketo_spark.replay as replay_mod
 from embulk_input_marketo_spark import generator
+from embulk_input_marketo_spark.functions.compare import content_hash
 from embulk_input_marketo_spark.lake import bloom as B
 from embulk_input_marketo_spark.lake.merge import MergeResult, merge_batch
 from embulk_input_marketo_spark.lake.table import LakeTable, bucket_expr
+from embulk_input_marketo_spark.operators.dedup import lww_dedup
 
 SCHEMA = T.StructType(
     [
@@ -87,6 +92,24 @@ def _keys_by_bucket(spark, per_bucket=4, prefix="k"):
     return out
 
 
+def _expected_skipped(spark, t, keys):
+    """Touched buckets none of whose batch keys the table's blooms may hold
+    (each bucket here has < 8 generations)."""
+    m = t.manifest()
+    by_bucket = _buckets_of(spark, keys)
+    hashes = dict(zip(keys, B.probe_hashes(spark, keys)))
+    might: dict[int, bool] = {}
+    for k, b in by_bucket.items():
+        ptr = m.bloom_ptrs.get(str(b))
+        if ptr is None:
+            hit = str(b) in set(m.files)
+        else:
+            bits, mb, kk, _n = B.load_bloom(t.meta_dir, ptr)
+            hit = B.might_contain(bits, mb, kk, *hashes[k])
+        might[b] = might.get(b, False) or hit
+    return sum(1 for hit in might.values() if not hit)
+
+
 class TestPrepassCounts:
     """The counts a cow merge reports, against a reference computed
     independently of the merge: null keys, deletes, present and new keys,
@@ -98,30 +121,13 @@ class TestPrepassCounts:
         + [(f"n{i}", "I") for i in range(10)]
     )
 
-    def _expected_skipped(self, spark, t, keys):
-        """Touched buckets none of whose batch keys the table's blooms may
-        hold (each bucket here has < 8 generations)."""
-        m = t.manifest()
-        by_bucket = _buckets_of(spark, keys)
-        hashes = dict(zip(keys, B.probe_hashes(spark, keys)))
-        might: dict[int, bool] = {}
-        for k, b in by_bucket.items():
-            ptr = m.bloom_ptrs.get(str(b))
-            if ptr is None:
-                hit = str(b) in set(m.files)
-            else:
-                bits, mb, kk, _n = B.load_bloom(t.meta_dir, ptr)
-                hit = B.might_contain(bits, mb, kk, *hashes[k])
-            might[b] = might.get(b, False) or hit
-        return sum(1 for hit in might.values() if not hit)
-
     @pytest.mark.parametrize("bloom", [True, False])
     def test_mixed_batch_counts(self, spark, tmp_path, bloom):
         t = _table(tmp_path, "t", bloom=bloom)
         merge_batch(spark, t, _batch(spark, self.SEED), "b1", mode="cow")
         keys = [u for u, _ in self.MIXED if u is not None]
         touched = len(set(_buckets_of(spark, keys).values()))
-        skipped = self._expected_skipped(spark, t, keys) if bloom else 0
+        skipped = _expected_skipped(spark, t, keys) if bloom else 0
         if bloom:
             assert 0 < skipped < touched, "the batch must mix folds and skips"
 
@@ -162,30 +168,151 @@ class TestPrepassCounts:
         assert empty == MergeResult(False, v, 0, 0, 0, 0)
         assert t.current_version() == v
 
+    def test_nondeterministic_batch_is_rejected(self, spark, tmp_path):
+        """The pre-pass and the write evaluate the batch separately, so a
+        plan that may differ between them is refused before any write; a
+        materialized copy of it merges."""
+        t = _table(tmp_path, "t")
+        merge_batch(spark, t, _batch(spark, self.SEED), "b1", mode="cow")
+        v = t.current_version()
+        batch = _batch(spark, self.MIXED, base=100).withColumn(
+            "text", F.concat(F.col("text"), F.rand().cast("string"))
+        )
+        with pytest.raises(ValueError, match="non-deterministic"):
+            merge_batch(spark, t, batch, "b2", mode="cow", bloom_fast_path=True)
+        assert t.current_version() == v
+        r = merge_batch(
+            spark, t, batch.localCheckpoint(), "b2", mode="cow",
+            bloom_fast_path=True,
+        )
+        assert r.applied and r.rows_in == 13
+        _assert_blooms_exact(spark, t)
+
+
+def _assert_blooms_exact(spark, t):
+    """Every bucket's bloom equals a rebuild over its live files, in bits
+    and key count."""
+    m = t.manifest()
+    paths = [e["path"] for b in m.files for e in m.files[b]]
+    keyed = (
+        spark.read.schema(T.StructType([m.current_schema()["url"]]))
+        .parquet(*paths)
+        .select(bucket_expr("url", m.n_buckets).alias("_b"),
+                *B.hash_cols("url"))
+    )
+    want = _BUILD(keyed, int(m.bloom_conf["m_bits"]), int(m.bloom_conf["k"]))
+    assert set(m.bloom_ptrs) == set(want) == set(m.files)
+    for b, (bits, n) in want.items():
+        got_bits, _mb, _k, got_n = B.load_bloom(t.meta_dir, m.bloom_ptrs[b])
+        assert got_bits.tobytes() == bits, f"bucket {b} bits"
+        assert got_n == n, f"bucket {b} key count"
+
+
+class TestReplayCountParity:
+    """A cow replay hands the merge raw slice rows, several per key. It
+    reports the counts of the slice's LWW winners (``lww_dedup``), null-key
+    rows counted as they arrive, and writes the oracle state."""
+
+    BASE_EVENTS = 400
+    COLS = ["url", "warc_ts", "html", "text", "lang", "text_encoding"]
+
+    def _log(self, spark, tmp_path):
+        """A generated base log, then one slice of hand-made edge cases."""
+        base = generator.changelog(spark, self.BASE_EVENTS, 40, seed=5)
+        a, b, c = sorted(
+            r.url for r in generator.expected_final_state(base).collect()
+        )[:3]
+        t0 = datetime.datetime(2024, 1, 2)  # after every base event
+
+        def ts(sec):
+            return None if sec is None else t0 + datetime.timedelta(seconds=sec)
+
+        nm1, nm2 = "https://null-major.example/1", "https://null-major.example/2"
+        events = [
+            (a, "U", 1), (a, "D", 2),  # an update then a delete: the delete wins
+            (b, "D", 3), (b, "I", 4),  # a delete then a re-insert
+            (c, "U", 10), (c, "U", 5),  # an older warc_ts at a higher lsn loses
+            (nm1, "I", 6), (nm1, "U", None),  # a null major loses
+            (nm2, "I", None),  # a lone null major wins
+            (None, "I", 7), (None, "D", 8),  # null keys
+        ] + [(f"https://new.example/{i}", "I", 20 + i) for i in range(12)] + [
+            ("https://new.example/0", "U", 40),
+        ]
+        rows = []
+        for i, (url, op, sec) in enumerate(events):
+            lsn = self.BASE_EVENTS + i
+            live = op != "D"
+            rows.append((
+                lsn, op, url, ts(sec),
+                f"<p>{url}@{lsn}</p>".encode() if live else None,
+                f"{url}@{lsn}" if live else None,
+                "en" if live else None, "utf-8" if live else None, 2,
+            ))
+        nullable = T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in base.schema]
+        )
+        path = str(tmp_path / "log")
+        base.unionByName(spark.createDataFrame(rows, nullable)).write.parquet(path)
+        return spark.read.parquet(path)
+
+    def _table(self, tmp_path, log, name, bloom):
+        schema = T.StructType(
+            [f for f in log.schema.fields
+             if f.name not in ("lsn", "op", "schema_version")]
+        )
+        return LakeTable.create(
+            str(tmp_path / name), schema, key_col="url", lww_major="warc_ts",
+            n_buckets=N_BUCKETS, bloom_bits=(1 << 12) if bloom else 0,
+        )
+
+    @pytest.mark.parametrize("bloom", [True, False])
+    def test_counts_match_slice_winners(self, spark, tmp_path, bloom):
+        log = self._log(spark, tmp_path)
+        t = self._table(tmp_path, log, "t", bloom)
+        replay_mod.replay(
+            spark, log.where(F.col("lsn") < self.BASE_EVENTS), t, mode="cow"
+        )
+        sl = log.where(F.col("lsn") >= self.BASE_EVENTS)
+        keyed = sl.where(F.col("url").isNotNull())
+        won = lww_dedup(keyed, "url", ["warc_ts", "lsn"]).collect()
+        keys = sorted({r.url for r in won})
+        rows_in = len(won)
+        rows_deleted = sum(r.op == "D" for r in won)
+        assert (rows_in, rows_deleted) == (17, 1)
+        touched = len(set(_buckets_of(spark, keys).values()))
+        skipped = _expected_skipped(spark, t, keys) if bloom else 0
+        if bloom:
+            assert 0 < skipped < touched, "the slice must mix folds and skips"
+
+        (r,) = replay_mod.replay(
+            spark, log, t, mode="cow", bloom_fast_path=True
+        ).batches
+        assert r == MergeResult(
+            True, r.version, rows_in=rows_in,
+            rows_upserted=rows_in - rows_deleted, rows_deleted=rows_deleted,
+            touched_buckets=touched, compacted_buckets=touched - skipped,
+            rows_null_key=2,
+        )
+        s = t.manifest().summary
+        assert (
+            s["rows_in"], s["rows_upserted"], s["rows_deleted"],
+            s["rows_null_key"], s["touched_buckets"],
+            s["bloom_skipped_buckets"],
+        ) == (rows_in, rows_in - rows_deleted, rows_deleted, 2, touched,
+              skipped)
+        want = generator.expected_final_state(log).where(
+            F.col("url").isNotNull()
+        )
+        assert content_hash(t.read(spark).select(*self.COLS)) == content_hash(
+            want.select(*self.COLS)
+        )
+        if bloom:
+            _assert_blooms_exact(spark, t)
+
 
 class TestBloomIdentity:
     """Blooms a cow commit writes are byte-identical to a rebuild over the
     bucket's live files."""
-
-    def _rebuilt(self, spark, t):
-        m = t.manifest()
-        paths = [e["path"] for b in m.files for e in m.files[b]]
-        keyed = (
-            spark.read.schema(T.StructType([m.current_schema()["url"]]))
-            .parquet(*paths)
-            .select(bucket_expr("url", m.n_buckets).alias("_b"),
-                    *B.hash_cols("url"))
-        )
-        return _BUILD(keyed, int(m.bloom_conf["m_bits"]), int(m.bloom_conf["k"]))
-
-    def _assert_exact(self, spark, t):
-        m = t.manifest()
-        want = self._rebuilt(spark, t)
-        assert set(m.bloom_ptrs) == set(want) == set(m.files)
-        for b, (bits, n) in want.items():
-            got_bits, _mb, _k, got_n = B.load_bloom(t.meta_dir, m.bloom_ptrs[b])
-            assert got_bits.tobytes() == bits, f"bucket {b} bits"
-            assert got_n == n, f"bucket {b} key count"
 
     def test_fold_append_and_first_write(self, spark, tmp_path, monkeypatch):
         builds = []
@@ -201,7 +328,7 @@ class TestBloomIdentity:
             _batch(spark, [(k, "I") for b in (0, 1, 2) for k in kb[b][:3]]),
             "b1", mode="cow",
         )
-        self._assert_exact(spark, t)
+        _assert_blooms_exact(spark, t)
         # bucket 0 folds (a present key), bucket 1 appends (new keys only),
         # bucket 3 is a first write through the append
         r = merge_batch(
@@ -213,7 +340,7 @@ class TestBloomIdentity:
         m = t.manifest()
         assert (r.touched_buckets, m.summary["bloom_skipped_buckets"]) == (3, 2)
         assert len({e["v"] for e in m.files["1"]}) == 2
-        self._assert_exact(spark, t)
+        _assert_blooms_exact(spark, t)
         # a multi-generation bucket folds; bucket 4 is a first write
         # through the fold
         merge_batch(
@@ -222,7 +349,7 @@ class TestBloomIdentity:
             "b3", mode="cow",
         )
         assert len(t.manifest().files["1"]) == 1
-        self._assert_exact(spark, t)
+        _assert_blooms_exact(spark, t)
         assert builds == [], "cow commits of bloomed buckets rebuild nothing"
 
     def test_bucket_without_bloom_rebuilds(self, spark, tmp_path, monkeypatch):
@@ -254,17 +381,22 @@ class TestBloomIdentity:
             "b2", mode="cow", bloom_fast_path=True,
         )
         assert calls == [("rebuild", ["2"])]
-        self._assert_exact(spark, t)
+        _assert_blooms_exact(spark, t)
 
 
-def _write_plan_exchanges_above_union(spark, first_execution: int) -> int:
-    """Exchanges between the write and the union, in the final plan of the
-    last parquet write run since ``first_execution``."""
+def _plans_since(spark, first_execution: int) -> list[str]:
+    """Physical plan descriptions of the SQL executions run since
+    ``first_execution``, in order."""
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [
+    return [
         execs.apply(i).physicalPlanDescription()
         for i in range(first_execution, execs.size())
     ]
+
+
+def _write_plan_exchanges_above_union(plans: list[str]) -> int:
+    """Exchanges between the write and the union, in the final plan of the
+    last parquet write."""
     plan = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p][-1]
     tree = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     above = tree.split("Union")[0]
@@ -272,13 +404,24 @@ def _write_plan_exchanges_above_union(spark, first_execution: int) -> int:
     return len(re.findall(r"\bExchange\b", above))
 
 
+def _read_schemas(plan: str) -> list[str]:
+    return re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+
+
 def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
     """The trickle shape: a bloom table built as a two-generation
     merge-on-read table, then one incremental cow replay with the bloom
-    fast path. Its merge runs 6 Spark jobs (the pre-pass: the batch's
-    dedup, the cache, the per-bucket exchange and the collect; the write:
-    its exchange and the write); it was 11 with the separate present-bucket,
-    stats and bloom-rebuild jobs and a second shuffle in the fold."""
+    fast path.
+
+    - The replay runs 5 Spark jobs: the max-lsn snapshot (1), the merge's
+      pre-pass (2: its exchange and the collect) and its write (2: its
+      exchange and the write). A two-stage snapshot, a batch dedup and a
+      cache of the batch would make it 8.
+    - Its merge runs 4 of them.
+    - The snapshot's plan has no exchange; the pre-pass scans no payload
+      column; the write plan has one exchange above the union; the driver
+      loads and rebuilds no bloom.
+    - ``salt_buckets`` adds no job or exchange: cow ignores it."""
     path = str(tmp_path / "log")
     generator.changelog(spark, 3_000, 150, seed=21).write.parquet(path)
     log = spark.read.parquet(path)
@@ -301,6 +444,7 @@ def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
         B, "build_bloom_deltas",
         lambda *a, **kw: builds.append(a) or _BUILD(*a, **kw))
     sc = spark.sparkContext
+    outer = f"cow-replay-{uuid.uuid4().hex}"
     group = f"cow-commit-{uuid.uuid4().hex}"
 
     def merge_in_group(*a, **kw):
@@ -308,16 +452,31 @@ def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
         try:
             return merge_batch(*a, **kw)
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobGroup(outer, outer)
 
     monkeypatch.setattr(replay_mod, "merge_batch", merge_in_group)
     first = spark._jsparkSession.sharedState().statusStore().executionsList().size()
-    report = replay_mod.replay(
-        spark, log.where(F.col("lsn") < 2_300), t, mode="cow",
-        bloom_fast_path=True,
-    )
+    sc.setJobGroup(outer, outer)
+    try:
+        report = replay_mod.replay(
+            spark, log.where(F.col("lsn") < 2_300), t, mode="cow",
+            bloom_fast_path=True, salt_buckets=8,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     (r,) = report.batches
     assert r.applied and r.compacted_buckets > 0
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    merge_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    replay_jobs = merge_jobs + len(sc.statusTracker().getJobIdsForGroup(outer))
+    assert (replay_jobs, merge_jobs) == (5, 4)
     assert loads == [] and builds == []
-    assert _write_plan_exchanges_above_union(spark, first) == 1
+
+    plans = _plans_since(spark, first)
+    (snapshot,) = [p for p in plans if "TakeOrderedAndProject" in p]
+    assert "Exchange" not in snapshot
+    (prepass,) = [p for p in plans if "FlatMapGroupsInPandas" in p]
+    (prepass_scan,) = set(_read_schemas(prepass))
+    assert "url" in prepass_scan and "html" not in prepass_scan
+    write = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p][-1]
+    assert any("html" in rs for rs in _read_schemas(write))
+    assert _write_plan_exchanges_above_union(plans) == 1

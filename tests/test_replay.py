@@ -140,3 +140,16 @@ def test_boundary_lsn_in_exactly_one_slice():
     for lo, hi in slices:
         seen.extend(range(lo + 1, hi + 1))
     assert seen == list(range(0, 10_001))
+
+
+def test_max_lsn_snapshot(spark):
+    """The job-start snapshot: the largest non-null lsn, and -1 for an
+    empty or all-null log (nothing to replay)."""
+    from embulk_input_marketo_spark.replay import _max_lsn
+
+    def log(*lsns):
+        return spark.createDataFrame([(x,) for x in lsns], "lsn long")
+
+    assert _max_lsn(log()) == -1
+    assert _max_lsn(log(None, None)) == -1
+    assert _max_lsn(log(3, None, 7, 5)) == 7

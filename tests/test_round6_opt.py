@@ -50,6 +50,24 @@ class TestRoundHalfUpMatchesSpark:
         for v, g, m, a in zip(vals, got, mine, arr):
             assert repr(g) == repr(m) == repr(float(a)), (v, g, m, a)
 
+    @pytest.mark.parametrize("decimals", [2, 6])
+    def test_array_matches_scalar_at_large_magnitudes(self, decimals):
+        """Half-boundary values (a trailing 5 one digit past ``decimals``)
+        at |x| from 1e4 to 1e9: the double scaling error grows with |x|,
+        and the guard band must grow with it."""
+        import numpy as np
+
+        vals = []
+        for e in range(4, 10):
+            for i in range(200):
+                whole = 10 ** e + (i * 7919) % (10 ** e)
+                frac = (i * 104729) % (10 ** decimals)
+                v = float(f"{whole}.{frac:0{decimals}d}5")
+                vals += [v, -v]
+        arr = vecnp.round_half_up_array(np.array(vals), decimals)
+        for v, a in zip(vals, arr):
+            assert repr(float(a)) == repr(vecnp.round_half_up(v, decimals)), v
+
 
 @pytest.fixture()
 def emb_fixture(spark):
@@ -112,6 +130,26 @@ class TestAssignCellsBackendEquivalence:
             ).collect()
         }
         assert got == want
+
+    def test_existing_out_col_is_replaced(self, spark, emb_fixture):
+        """A frame that already carries ``_cell`` gets it replaced, not
+        duplicated, on both backends: numpy (double vectors) and the JVM
+        expressions (float vectors, the same values)."""
+        cents = spark.createDataFrame(
+            [(i, [((i * 13 + d * 3) % 100 - 50) / 7.0 for d in range(16)])
+             for i in range(5)],
+            "cell_id int, centroid array<double>",
+        )
+        stale = emb_fixture.withColumn("_cell", F.lit(-1))
+        f32 = stale.withColumn("embedding", F.col("embedding").cast("array<float>"))
+        f64 = f32.withColumn("embedding", F.col("embedding").cast("array<double>"))
+        got = {}
+        for backend, df in (("numpy", f64), ("jvm", f32)):
+            out = assign_cells(df, cents, round_scores=6)
+            assert out.columns == stale.columns, backend
+            got[backend] = {r["vec_id"]: r["_cell"] for r in out.collect()}
+        assert got["numpy"] == got["jvm"]
+        assert -1 not in set(got["numpy"].values())
 
     def test_tie_breaks_to_larger_cell(self, spark):
         cents = spark.createDataFrame(
