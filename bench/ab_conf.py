@@ -58,7 +58,7 @@ def run_once(log_dir: str, events: int, cores: int, extra: dict) -> dict:
         lww_major="warc_ts", n_buckets=64,
     )
     replay(spark, log.where(F.col("lsn") < max(events // 50, 10_000)), warm,
-           batch_span=events, extract_text_from_html=True, pipeline=True)
+           batch_span=events, extract_text_from_html=True)
     shutil.rmtree(os.path.join(work, "warm"), ignore_errors=True)
 
     table = LakeTable.create(
@@ -68,7 +68,7 @@ def run_once(log_dir: str, events: int, cores: int, extra: dict) -> dict:
     t0 = time.perf_counter()
     report = replay(
         spark, log, table, batch_span=max(events // 3, 1),
-        extract_text_from_html=True, pipeline=True,
+        extract_text_from_html=True,
     )
     sec = time.perf_counter() - t0
     out = {

@@ -179,9 +179,6 @@ def _timeline(events_path: str, t0_ms: float, t1_ms: float, cores: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
-    ap.add_argument("--pipeline", type=int, default=0,
-                    help="1 = async-commit write-ahead replay, 2 = full "
-                    "stage overlap (see replay(pipeline=))")
     ap.add_argument("--slots", type=int, default=0,
                     help="task slots (local[slots]); default = cores. "
                     "Oversubscribing slots past the pinned core budget "
@@ -253,7 +250,6 @@ def main() -> None:
         spark, log, table,
         batch_span=max(args.events // args.batches, 1),
         extract_text_from_html=True,
-        pipeline=(False, True, "full")[args.pipeline],
     )
     sec = time.perf_counter() - t0
     t1_ms = time.time() * 1000

@@ -335,7 +335,7 @@ def worker(
     )
     replay(
         spark, log.where(F.col("lsn") < warm_n), warm_table,
-        batch_span=warm_n, extract_text_from_html=True, pipeline=True,
+        batch_span=warm_n, extract_text_from_html=True,
     )
     shutil.rmtree(os.path.join(work, "warm"), ignore_errors=True)
 
@@ -360,28 +360,17 @@ def worker(
     cpu_a = _cpu_snap(pinned)
     t0 = time.perf_counter()
     # full pipeline incl. the Arrow-UDF text extraction from html — the
-    # engine's spec'd ingest shape (text is DERIVED, then byte-verified)
+    # engine's spec'd ingest shape (text is DERIVED, then byte-verified).
+    # replay's write-ahead commit publishes slice k's commit bookkeeping
+    # (footer stats, manifest build, fsync) on a side thread under slice
+    # k+1's write job. That driver gap is an ABSOLUTE cost — profiled at
+    # 10-15% of replay wall at 8 cores vs ~3% at 2 — so hiding it is pure
+    # wide-config gain, i.e. exactly the serial fraction the
+    # two-parallelism criterion exists to catch.
     report = replay(
         spark, log, table,
         batch_span=max(EVENTS // BATCHES, 1),
         extract_text_from_html=True,
-        # async-commit write-ahead (replay(pipeline=True)): slice k's commit
-        # bookkeeping (footer stats, manifest build, fsync) publishes on a
-        # side thread under slice k+1's write job. That driver gap is an
-        # ABSOLUTE cost — profiled at 10-15% of replay wall at 8 cores vs
-        # ~3% at 2 — so hiding it is pure wide-config gain, i.e. exactly the
-        # serial fraction the two-parallelism criterion exists to catch.
-        # Never two cluster jobs at once ("commit" depth), so no
-        # memory-bandwidth contention is added on this single box.
-        # SPARK_GRAFT_SCALE_PIPELINE=full measures the kept-for-clusters
-        # "full" overlap (scan of slice k+1 under merge of slice k — two
-        # concurrent jobs) so its cost on a bandwidth-capped box is a
-        # recorded number, not an untested claim (r4 VERDICT item 7).
-        pipeline=(
-            "full"
-            if os.environ.get("SPARK_GRAFT_SCALE_PIPELINE") == "full"
-            else True
-        ),
     )
     sec = time.perf_counter() - t0
     cpu = _cpu_fracs(cpu_a, _cpu_snap(pinned))
@@ -422,7 +411,6 @@ def worker(
         "equivalence_pass": bool(na == ne and ha == he),
         "state_rows": na,
         "cpu_during_timed_window": cpu,
-        "pipeline": os.environ.get("SPARK_GRAFT_SCALE_PIPELINE", "commit"),
     }
     with open(out_file, "w") as f:
         json.dump(result, f)
@@ -711,7 +699,6 @@ def _run_pairs(work: str, log_dir: str, owns_work: bool) -> None:
         "pass_bar": 0.8,
         "pass": eff >= 0.8,
         "equivalence_pass": small["equivalence_pass"] and big["equivalence_pass"],
-        "pipeline": os.environ.get("SPARK_GRAFT_SCALE_PIPELINE", "commit"),
     }
     os.makedirs(os.path.join(REPO, "BENCH", "runs"), exist_ok=True)
     stamp = time.strftime("%Y%m%d-%H%M%S")
@@ -806,8 +793,8 @@ def _archive_rows() -> str:
             result = "PASS" if d["pass"] else "FAIL"
         proto = d.get("protocol", "back-to-back adjacent")
         if d.get("pipeline", "commit") == "full":
-            # diagnostic of the kept-for-clusters full overlap mode, not
-            # the shipped config — labeled and excluded from bracketing
+            # a recorded diagnostic of the since-deleted full overlap mode,
+            # not the shipped config — labeled and excluded from bracketing
             proto += " (pipeline=full diagnostic)"
         rows.append(
             f"| {os.path.basename(p)} | {'→'.join(cfgs)} "
@@ -852,7 +839,8 @@ def _bracket_partner(protocol: str, events: int) -> dict | None:
             # PARTIAL stamps (throttled windows, aborted marathons) record
             # host conditions, not engine scaling — never a bracket side
             or "PARTIAL" in str(d.get("stamp", ""))
-            # pipeline=full diagnostics measure a non-shipped overlap mode
+            # recorded pipeline=full diagnostics measure a deleted overlap
+            # mode (BENCH/runs/scaling-20260820-142022.json)
             or d.get("pipeline", "commit") == "full"
         ):
             continue

@@ -883,6 +883,13 @@ def _semantic_pairs_np(
     - candidates within 1e-6 of the threshold are decided by Spark's
       exact string-decimal HALF_UP rounding (vecnp.round_half_up), and
       the emitted cos_sim is that rounded double;
+    - a NaN cosine from inf elements or overflow passes the threshold with
+      ``cos_sim = NaN``: Spark orders NaN above every double, so the join
+      keeps ``round(NaN, 6) >= threshold``. A zero norm product emits
+      nothing (the join path raises ANSI DIVIDE_BY_ZERO there). A null
+      element reaches pandas as NaN, so a vector holding a NaN element
+      pairs with nobody, as a null-element vector does in the join (where
+      a literal NaN element would pair with cos_sim NaN);
     - pairs are (smaller id, larger id) with distinct ids — the join's
       ``left_id < right_id``; oversize cells (> max_cell_size) emit
       nothing (the skew guard), degenerate rows (null/ragged/null-element
@@ -938,17 +945,23 @@ def _semantic_pairs_np(
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         nrm = vecnp.seq_sq_norms(M)
         G = vecnp.seq_matmul(M, M)
+        den = nrm[:, None] * nrm[None, :]
         with np.errstate(all="ignore"):
-            cos = G / (nrm[:, None] * nrm[None, :])
+            cos = G / den
         iu, ju = np.triu_indices(k, k=1)
         vals = cos[iu, ju]
         idv = ids.to_numpy()
+        null_elem = np.isnan(M).any(axis=1)
+        nan = (
+            np.isnan(vals) & (den[iu, ju] != 0)
+            & ~null_elem[iu] & ~null_elem[ju]
+        )
         with np.errstate(invalid="ignore"):
-            cand = (vals >= threshold - 1e-6) & (idv[iu] != idv[ju])
+            cand = ((vals >= threshold - 1e-6) | nan) & (idv[iu] != idv[ju])
         li, ri, cs = [], [], []
         for p in np.nonzero(cand)[0]:
             r = vecnp.round_half_up(float(vals[p]), 6)
-            if r >= threshold:
+            if nan[p] or r >= threshold:
                 a_, b_ = idv[iu[p]], idv[ju[p]]
                 lo, hi = (a_, b_) if a_ < b_ else (b_, a_)
                 li.append(lo)
@@ -956,10 +969,13 @@ def _semantic_pairs_np(
                 cs.append(r)
         return pd.DataFrame({"left_id": li, "right_id": ri, "cos_sim": cs})
 
+    # Arrow turns a NaN double into null on the way back, and a null is
+    # never emitted otherwise: restore the NaN cosines
     return (
         cells.where(F.col("_cell").isNotNull())
         .groupBy("_cell")
         .applyInPandas(fn, out_schema)
+        .withColumn("cos_sim", F.coalesce("cos_sim", F.lit(float("nan"))))
     )
 
 

@@ -390,7 +390,6 @@ def merge_batch(
     salt_buckets: int | None = None,
     mode: str = "mor",
     compact_threshold: int = 8,
-    pre_reduce: bool = False,
     checkpoint: dict[str, Any] | None = None,
     window: tuple[int, int] | None = None,
     channel: tuple[str, int] | None = None,
@@ -435,7 +434,7 @@ def merge_batch(
     ValueError before anything is written.
 
     salt_buckets: optional extra pre-split of hot keys in the mor
-    ``pre_reduce`` and its compactions. Spark's map-side partial aggregation
+    compactions. Spark's map-side partial aggregation
     already caps per-key reducer input at one row per map partition, so the
     salt phase (an extra shuffle) is only worth it for pathological
     single-key skew; default off. cow ignores it: its fold reduces in the
@@ -487,8 +486,7 @@ def merge_batch(
         )
 
     staged = _stage_mor(
-        spark, table, m, batch_full, full_cols, pre_reduce, salt_buckets,
-        derive, label=m.version + 1,
+        spark, table, m, batch_full, full_cols, derive, label=m.version + 1
     )
     return _commit_mor(
         spark, table, m, staged, batch_id, mode, compact_threshold,
@@ -548,9 +546,8 @@ def _prepare_batch(
         if mode == "cow":
             # cow folds the batch against BASE rows that already carry real
             # values; materialize up front so its write path (which this
-            # hook does not reach) never persists a placeholder. mor's
-            # pre_reduce is safe to defer: lww_dedup keeps whole winner
-            # rows, and the winner's html still rides to the write task.
+            # hook does not reach) never persists a placeholder. mor
+            # appends raw rows, so the html still rides to the write task.
             for name, expr in derive.items():
                 batch_full = batch_full.withColumn(name, expr)
             derive = None
@@ -573,7 +570,6 @@ class StagedMerge:
     rows_in: int
     rows_deleted: int
     rows_null_key: int
-    pre_reduce: bool
     schema_version: int
     label: int
 
@@ -589,8 +585,6 @@ def _stage_mor(
     m: Manifest,
     batch_full: DataFrame,
     full_cols: list[str],
-    pre_reduce: bool,
-    salt_buckets: int | None,
     derive: dict[str, Any] | None,
     label: int,
 ) -> StagedMerge:
@@ -614,13 +608,6 @@ def _stage_mor(
         F.count_if(F.col("_deleted") & ~F.col("_nk")).alias("rows_deleted"),
         F.count_if(F.col("_nk")).alias("rows_null_key"),
     ).where(~F.col("_nk")).drop("_nk")
-    if pre_reduce:
-        to_write = lww_dedup(
-            to_write,
-            key_cols=key,
-            order_cols=[m.lww_major, "_lsn"],
-            salt_buckets=salt_buckets,
-        )
     staging = table.snapshot_staging_dir(label)
     _ensure_stats_friendly_writes(spark)
     # the exchange hands each write task whole buckets, byte-weight-balanced
@@ -660,16 +647,16 @@ def _stage_mor(
         # nothing to commit: reclaim the staging dir instead of orphaning it
         fsio.remove_dir(staging)
         return StagedMerge(
-            "", {}, 0, 0, rows_null_key, pre_reduce, m.schema_version, label
+            "", {}, 0, 0, rows_null_key, m.schema_version, label
         )
 
     new_files = _enumerate_bucket_files(
-        staging, m.schema_version, label, reduced=pre_reduce,
+        staging, m.schema_version, label, reduced=False,
         stats_col=m.key_col, major_col=m.lww_major,
     )
     return StagedMerge(
         staging, new_files, rows_in, rows_deleted, rows_null_key,
-        pre_reduce, m.schema_version, label,
+        m.schema_version, label,
     )
 
 
@@ -689,10 +676,11 @@ def _commit_mor(
     salt_buckets: int | None,
 ) -> MergeResult:
     """merge-on-read COMMIT: driver bookkeeping + atomic manifest swap for a
-    :class:`StagedMerge`, against manifest ``m`` (the caller's base — the
-    synchronous path passes the same manifest it staged under; the pipelined
-    path passes a FRESH read so commits rebase onto whatever landed since
-    staging)."""
+    :class:`StagedMerge`, against manifest ``m``. A direct
+    :func:`merge_batch` passes the manifest it staged under;
+    :func:`commit_staged_merge` (replay's write-ahead commit) passes a fresh
+    read, so the commit rebases onto whatever landed since staging — the
+    previous slice's merge and auto-compaction."""
     rows_in = staged.rows_in
     rows_deleted = staged.rows_deleted
     rows_null_key = staged.rows_null_key
@@ -797,38 +785,33 @@ def stage_merge(
     batch: DataFrame,
     op_col: str = "op",
     lsn_col: str = "_lsn",
-    pre_reduce: bool = False,
-    salt_buckets: int | None = None,
     derive: dict[str, Any] | None = None,
     manifest: Manifest | None = None,
     label: int | None = None,
 ) -> StagedMerge:
     """Run a merge-on-read batch's CLUSTER work (scan → bucket exchange →
     parquet write to a private staging dir) WITHOUT committing — the write
-    half of a write-ahead pipeline. Pair with :func:`commit_staged_merge`,
-    which publishes staged batches strictly in order.
+    half of replay's write-ahead commit. Pair with
+    :func:`commit_staged_merge`, which publishes staged batches in order.
 
-    Because the staged data never becomes visible until its commit, two
-    staged writes may run CONCURRENTLY (Spark schedules both jobs' tasks,
-    the later job filling slots the earlier one's straggler tail leaves
-    idle) — that is the point: on the replay path the next slice's write
-    overlaps the previous slice's commit bookkeeping and stage tails, which
-    are otherwise pure idle on a wide cluster (measured 10-15% of replay
-    wall at 8 cores; ``replay(pipeline=True)``).
+    The staged data stays invisible until its commit, so ``replay`` stages
+    slice k while slice k-1's commit bookkeeping (footer stats, manifest
+    build, fsync, auto-compaction) runs on a side thread — driver time that
+    would otherwise leave the cluster idle between write jobs.
 
     ``label``: the version number used to NAME the staging dir. It must stay
     ABOVE the table's committed frontier until this stage commits (expiry's
     in-flight-writer guard never descends into dirs beyond the frontier), so
-    pipelined callers pass a guess with headroom for the commits that will
-    land in between; the commit renames to the real version. Defaults to
-    ``manifest.version + 1`` (the synchronous guess)."""
+    a caller with commits still in flight passes a guess with headroom for
+    the versions they will take; the commit renames to the real version.
+    Defaults to ``manifest.version + 1`` (nothing in flight)."""
     m = manifest or table.manifest()
     batch_full, full_cols, derive = _prepare_batch(
         table, m, batch, op_col, lsn_col, derive, mode="mor"
     )
     return _stage_mor(
-        spark, table, m, batch_full, full_cols, pre_reduce, salt_buckets,
-        derive, label=m.version + 1 if label is None else label,
+        spark, table, m, batch_full, full_cols, derive,
+        label=m.version + 1 if label is None else label,
     )
 
 

@@ -1691,6 +1691,15 @@ def _sql_image_resize() -> str:
     """
 
 
+def _require_non_negative_ids(doc_ids) -> None:
+    """The fixture builders' precondition: their Python ``%`` equals the
+    sign-of-dividend remainder of the JVM and DuckDB only for ids >= 0."""
+    if (doc_ids < 0).any():
+        raise ValueError(
+            f"fixture builders need doc_id >= 0, got {int(doc_ids.min())}"
+        )
+
+
 def _pgm_fixture_batches(batches):
     """numpy builder for the ``image_resize_real`` fixture: per doc an
     actual PGM (P5) image — dims (8+doc_id%5) × (6+doc_id%7), pixel i =
@@ -1698,11 +1707,16 @@ def _pgm_fixture_batches(batches):
     (hash-compared over the full sf1.0 corpus), but the integer math runs
     vectorized instead of one interpreted format_string per pixel — the
     assembly dominated the query (guide §4.2; 7.7 s → 1.0 s for the
-    fixture alone)."""
+    fixture alone).
+
+    Requires ``doc_id >= 0``: Python's ``%`` takes the sign of the divisor,
+    the JVM's and the DuckDB oracle's take the dividend's, so the two agree
+    only on non-negative ids. A negative id raises ValueError."""
     import numpy as np
     import pandas as pd
 
     for pdf in batches:
+        _require_non_negative_ids(pdf["doc_id"])
         out = []
         for dv in pdf["doc_id"]:
             dv = int(dv)
@@ -1767,7 +1781,10 @@ def _wav_fixture_batches(batches):
     s = u - 32768). Byte-identical to the r5 JVM-expression assembly
     (hash-compared over the full sf1.0 corpus); the hex-per-sample
     format_string transform it replaces was ~2/3 of the query's wall
-    time (guide §4.2)."""
+    time (guide §4.2).
+
+    Requires ``doc_id >= 0``, as :func:`_pgm_fixture_batches` does: a
+    negative id raises ValueError."""
     import numpy as np
     import pandas as pd
 
@@ -1780,6 +1797,7 @@ def _wav_fixture_batches(batches):
         "0200" "1000"         # block align 2, bits 16
     )
     for pdf in batches:
+        _require_non_negative_ids(pdf["doc_id"])
         out = []
         for dv in pdf["doc_id"]:
             dv = int(dv)

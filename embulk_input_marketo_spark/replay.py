@@ -12,13 +12,17 @@ a single-threaded CSV loop (the reference's data plane is one task,
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import embulk_input_marketo_spark.lake.merge as lake_merge
 from embulk_input_marketo_spark.checkpoint import batch_id_for, resume_hwm
+from embulk_input_marketo_spark.lake import fsio
 from embulk_input_marketo_spark.lake.merge import MergeResult, merge_batch
 from embulk_input_marketo_spark.lake.table import LakeTable
 from embulk_input_marketo_spark.operators.windows import bounded_scan, slice_range
@@ -57,7 +61,7 @@ def replay(
     registry: SchemaRegistry | None = None,
     max_batches: int | None = None,
     on_batch: Callable[[MergeResult], Any] | None = None,
-    pipeline: bool | str = False,
+    pipeline: bool = True,
     bloom_fast_path: bool = False,
 ) -> ReplayReport:
     """Replay the changelog into the table from the committed checkpoint.
@@ -71,84 +75,120 @@ def replay(
       merge raw, several rows per key included: mor appends them and cow
       LWW-reduces them with the base rows in its fold
       (``lake/merge.merge_batch``).
+    - mor slices are written ahead: slice k's data is staged to a private
+      dir (``lake/merge.stage_merge``) while slice k-1's commit bookkeeping
+      (footer stats, manifest build, fsync, auto-compaction) publishes on
+      one side thread (``commit_staged_merge``), strictly in slice order,
+      so only the driver gap between write jobs is overlapped. ``on_batch``
+      fires on that thread. An uncommitted staged dir is invisible
+      (expiry's in-flight guard skips it), an error path reclaims every
+      unconsumed one, and a rerun converges from the committed hwm.
+    - cow slices merge inline (``merge_batch``): each fold reads the base
+      the previous slice wrote.
+    - ``registry``: before each slice, wait for the in-flight commit, apply
+      the registry changes effective by the slice's upper lsn, and project
+      the slice against the re-read schema.
     - ``salt_buckets`` acts on mor only (its compactions); the cow fold
       reduces in its one bucket exchange, unsalted.
-    - ``pipeline`` (mor only, ignored when a ``registry`` is given):
-      write-ahead replay — slice k's data is staged to a private dir
-      (lake/merge.stage_merge), the commit publishes strictly in slice order
-      on a side thread while slice k+1's write job already runs
-      (commit_staged_merge). ``True`` overlaps the COMMIT bookkeeping only
-      (never two cluster jobs at once); ``"full"`` additionally overlaps
-      adjacent slices' write jobs — see :func:`_replay_pipelined` for the
-      measured tradeoff. This adds NO extra copy of the slice — it
-      reorders already-necessary work into idle the commit gap (and, for
-      "full", stage straggler tails) leaves: measured 10-15% of
-      replay wall at 8 cores, and pure scaling loss — the same absolute
-      driver latency hides behind 4x longer compute at a quarter the cores.
-      Crash/idempotence semantics are unchanged — an uncommitted staged dir
-      is invisible (expiry's in-flight guard skips it) and a rerun
-      converges from the committed hwm exactly as before.
     - ``bloom_fast_path`` (cow mode with key blooms enabled): probe each
       slice's keys against the per-bucket blooms before the fold — buckets
       whose keys are all provably absent append instead of read+rewrite
       (``lake/merge.merge_batch``). The insert-heavy crawl-frontier knob;
       a no-op for mor (mor never reads base data on merge).
+    - ``pipeline`` is accepted for older callers and selects nothing.
     """
     hwm = resume_hwm(table)
+    report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
     max_lsn = _max_lsn(changelog)
     if max_lsn <= hwm:
         # skip-batch guard (C7): nothing new, keep state
-        return ReplayReport(start_hwm=hwm, end_hwm=hwm)
+        return report
     if n_slices is not None:
         # derive the span from the lsn bounds this function already computed —
         # callers wanting "K slices" need no extra count() scan of their own
         batch_span = max(-(-(max_lsn - hwm) // n_slices), 1)
+    slices = list(slice_range(hwm, max_lsn, batch_span))[:max_batches]
 
-    slices = list(slice_range(hwm, max_lsn, batch_span))
-
-    if pipeline and registry is None and mode == "mor":
-        if max_batches is not None:
-            slices = slices[:max_batches]
-        return _replay_pipelined(
-            spark, changelog, table, slices, hwm, salt_buckets,
-            compact_threshold, extract_text_from_html, on_batch,
-            depth="full" if pipeline == "full" else "commit",
-        )
-
-    report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
-    for lo, hi in slices:
-        if max_batches is not None and len(report.batches) >= max_batches:
-            break
-        if registry is not None:
-            registry.reconcile(table, up_to_lsn=hi)
-
-        window_df = bounded_scan(changelog, lo, hi)
-        m = table.manifest()
-        batch, derive = _project_slice(
-            window_df, m, extract_text_from_html, mode
-        )
-        # both modes hand the merge raw slice rows. mor appends them
-        # (LSM-style; compaction and the read-time reduce own the dedup);
-        # cow reduces them with the base rows in its fold's one exchange
-        result = merge_batch(
-            spark,
-            table,
-            batch,
-            batch_id=batch_id_for(table.path, lo, hi),
-            salt_buckets=salt_buckets,
-            mode=mode,
-            compact_threshold=compact_threshold,
-            checkpoint={"hwm_lsn": hi},
-            window=(lo, hi),
-            lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
-            derive=derive,
-            bloom_fast_path=bloom_fast_path,
-        )
+    def record(result: MergeResult, hi: int) -> None:
         report.batches.append(result)
         if result.applied:
             report.end_hwm = hi
         if on_batch:
             on_batch(result)
+
+    def merge_kw(lo: int, hi: int) -> dict[str, Any]:
+        return dict(
+            batch_id=batch_id_for(table.path, lo, hi),
+            checkpoint={"hwm_lsn": hi},
+            window=(lo, hi),
+            lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
+            compact_threshold=compact_threshold,
+            salt_buckets=salt_buckets,
+        )
+
+    unconsumed: dict[int, Any] = {}  # slice index → staged, commit pending
+
+    def commit(i: int, staged: Any) -> None:
+        lo, hi = slices[i]
+        try:
+            result = lake_merge.commit_staged_merge(
+                spark, table, staged, **merge_kw(lo, hi)
+            )
+        finally:
+            # a commit attempt that consumed the dir (renamed it onto the
+            # chain, or reclaimed it as a no-op / drift / conflict) drops
+            # the claim; a failure before that leaves it for the cleanup below
+            if not (staged.staging and os.path.exists(staged.staging)):
+                unconsumed.pop(i, None)
+        record(result, hi)
+
+    m = table.manifest()
+    pool = ThreadPoolExecutor(max_workers=1)
+    pending = None  # the in-flight commit
+    try:
+        for i, (lo, hi) in enumerate(slices):
+            if registry is not None:
+                if pending is not None:
+                    pending.result()
+                    pending = None
+                registry.reconcile(table, up_to_lsn=hi)
+                m = table.manifest()
+            batch, derive = _project_slice(
+                bounded_scan(changelog, lo, hi), m, extract_text_from_html, mode
+            )
+            if mode == "cow":
+                record(merge_batch(
+                    spark, table, batch, mode="cow", derive=derive,
+                    bloom_fast_path=bloom_fast_path, **merge_kw(lo, hi),
+                ), hi)
+                continue
+            # label headroom: each in-order commit advances ≤2 versions (merge
+            # + auto-compaction) and at most one commit is in flight, so +3
+            # per slice keeps every uncommitted staging dir above the
+            # committed frontier — the property expiry's in-flight-writer
+            # guard relies on. The commit renames the dir to its real version.
+            unconsumed[i] = lake_merge.stage_merge(
+                spark, table, batch, manifest=m, derive=derive,
+                label=m.version + 3 * (i + 1),
+            )
+            if pending is not None:
+                pending.result()  # surface a commit error before going deeper
+            pending = pool.submit(commit, i, unconsumed[i])
+        if pending is not None:
+            pending.result()
+            pending = None
+    finally:
+        # threads cannot be cancelled mid-write: wait for the in-flight
+        # commit, then reclaim every staged dir no commit attempt consumed
+        if pending is not None:
+            try:
+                pending.result()
+            except Exception:
+                pass  # already propagating the primary error
+        pool.shutdown(wait=True)
+        for staged in unconsumed.values():
+            if staged.staging:
+                fsio.remove_dir(staged.staging)
     return report
 
 
@@ -199,12 +239,8 @@ def _project_slice(
     batch = window_df.select(*proj, F.col("op"), F.col("lsn").alias("_lsn"))
     derive = None
     if extract_text_from_html and "text" in [f.name for f in cur_fields]:
-        # the engine's own text derivation (input_hint §2.8): Arrow
-        # pandas UDF over the html payload; output must be byte-identical
-        # per url to the oracle's expected text
-        # arrow transport: the Arrow-native twin of the pandas UDF —
-        # same kernel, same bytes, but no per-row python objects on
-        # either side of the worker exchange (textops.extract_text_arrow)
+        # the engine's own text derivation (input_hint §2.8), Arrow-native
+        # over the html payload; byte-identical per url to the oracle's text
         from embulk_input_marketo_spark.functions.textops import (
             extract_text_arrow as extract_text,
         )
@@ -220,153 +256,3 @@ def _project_slice(
             batch = batch.withColumn("text", extract_text(F.col("html")))
     return batch, derive
 
-
-def _replay_pipelined(
-    spark: SparkSession,
-    changelog: DataFrame,
-    table: LakeTable,
-    slices: list[tuple[int, int]],
-    hwm: int,
-    salt_buckets: int | None,
-    compact_threshold: int,
-    extract_text_from_html: bool,
-    on_batch: Callable[[MergeResult], Any] | None,
-    depth: str = "commit",
-) -> ReplayReport:
-    """Write-ahead replay: slice k+1's work runs CONCURRENTLY with slice k's
-    commit; commits publish strictly in slice order (so hwm monotonicity,
-    the window idempotence gate, and crash-rerun convergence are exactly the
-    sequential path's).
-
-    Why this is the scaling-correct shape: the per-commit driver latency
-    (footer stats, manifest build, fsync) and each write stage's straggler
-    tail are ABSOLUTE costs — at 4x the cores the compute that used to hide
-    them is 4x shorter, so they surface as pure wide-config idle (profiled:
-    10-15% of replay wall at 8 cores vs ~3% at 2). Overlapping the next
-    slice's already-necessary work into that idle removes the serial
-    fraction instead of amortizing it. On a 1000-executor cluster the same
-    overlap hides the catalog round-trip per commit.
-
-    ``depth`` picks how much overlaps:
-
-    - ``"commit"`` (the ``pipeline=True`` default): slice k's COMMIT
-      bookkeeping runs on a side thread under slice k+1's write job; at most
-      one cluster job at a time, so no extra memory-bandwidth contention —
-      this reclaims the driver gap only.
-    - ``"full"``: additionally stages slice k+1's WRITE JOB concurrently
-      with slice k's (lookahead exactly 1 — deeper adds concurrent-shuffle
-      memory pressure with no more idle to fill), filling straggler tails
-      too. Measured on the single-box bench (8 pinned cores, 10M events,
-      interleaved A/B x3): occupancy 0.85→0.94-0.97, gap 2.4s→0.6-1.2s,
-      partial 3.0-3.8s→0.9-2.0s — but throughput FELL 5-15%: two concurrent
-      16M-row write jobs inflate total task time ~30% on this
-      bandwidth-capped host (same failure mode as the rejected scan
-      prefetch). Kept because the tradeoff inverts when per-task time is
-      NOT bandwidth-bound — real executors with their own memory channels,
-      or remote-object-store scans — which is exactly where straggler tails
-      dominate."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from embulk_input_marketo_spark.lake import fsio
-    from embulk_input_marketo_spark.lake.merge import (
-        commit_staged_merge,
-        stage_merge,
-    )
-
-    report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
-    if not slices:
-        return report
-    m0 = table.manifest()
-
-    def stage(i: int):
-        lo, hi = slices[i]
-        batch, derive = _project_slice(
-            bounded_scan(changelog, lo, hi), m0, extract_text_from_html, "mor"
-        )
-        # label headroom: each in-order commit advances ≤2 versions (merge +
-        # auto-compaction) and at most one stage runs ahead, so +3 per slice
-        # keeps every UNCOMMITTED staging dir above the committed frontier —
-        # the property expiry's in-flight-writer guard relies on. The commit
-        # renames the dir to the version it actually lands at.
-        return stage_merge(
-            spark, table, batch, manifest=m0, salt_buckets=salt_buckets,
-            derive=derive, label=m0.version + 3 * (i + 1),
-        )
-
-    staged_by_idx: dict[int, Any] = {}  # produced, commit not yet attempted
-
-    def do_commit(i: int, staged) -> None:
-        import os as _os
-
-        try:
-            lo, hi = slices[i]
-            result = commit_staged_merge(
-                spark, table, staged,
-                batch_id=batch_id_for(table.path, lo, hi),
-                compact_threshold=compact_threshold,
-                checkpoint={"hwm_lsn": hi},
-                window=(lo, hi),
-                lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
-                salt_buckets=salt_buckets,
-            )
-        finally:
-            # drop the cleanup claim only once the commit attempt CONSUMED
-            # the dir (success renamed it onto the chain; a no-op / drift /
-            # conflict reclaimed it). A failure upstream of the consume —
-            # or an unexpected one inside it — leaves the claim, and the
-            # replay-level cleanup reclaims the dir
-            if not (staged.staging and _os.path.exists(staged.staging)):
-                staged_by_idx.pop(i, None)
-        report.batches.append(result)
-        if result.applied:
-            report.end_hwm = hi
-        if on_batch:
-            on_batch(result)
-
-    # commits run on ONE worker, submitted (and completion-checked) strictly
-    # in slice order — the report sees them in order and at most one commit
-    # is ever in flight, exactly the sequential path's publish discipline
-    stage_futures: dict[int, Any] = {}
-    stage_pool = ThreadPoolExecutor(max_workers=2) if depth == "full" else None
-    commit_pool = ThreadPoolExecutor(max_workers=1)
-    pending = None
-    try:
-        for i in range(len(slices)):
-            if stage_pool is not None:
-                if i not in stage_futures:
-                    stage_futures[i] = stage_pool.submit(stage, i)
-                if i + 1 < len(slices) and i + 1 not in stage_futures:
-                    stage_futures[i + 1] = stage_pool.submit(stage, i + 1)
-                staged = stage_futures.pop(i).result()
-            else:
-                staged = stage(i)
-            staged_by_idx[i] = staged
-            if pending is not None:
-                pending.result()  # surface commit errors before going deeper
-            pending = commit_pool.submit(do_commit, i, staged)
-        if pending is not None:
-            pending.result()
-            pending = None
-    finally:
-        # an error path must not leak a staged-but-uncommitted dir — wait
-        # for whatever is in flight (threads can't be cancelled mid-write),
-        # then reclaim anything no commit attempt consumed
-        if pending is not None:
-            try:
-                pending.result()
-            except Exception:
-                pass  # already propagating the primary error
-        for f in stage_futures.values():
-            try:
-                s = f.result()
-                if s.staging:
-                    fsio.remove_dir(s.staging)
-            except Exception:
-                pass  # the stage itself failed — nothing durable leaked
-        commit_pool.shutdown(wait=True)
-        if stage_pool is not None:
-            stage_pool.shutdown(wait=True)
-        for s in staged_by_idx.values():
-            if s.staging:
-                fsio.remove_dir(s.staging)
-    return report

@@ -434,7 +434,7 @@ def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
         n_buckets=N_BUCKETS, bloom_bits=1 << 12,
     )
     replay_mod.replay(spark, log.where(F.col("lsn") < 2_000), t, n_slices=2,
-                      compact_threshold=sys.maxsize, pipeline=True)
+                      compact_threshold=sys.maxsize)
 
     loads, builds = [], []
     real_load = B.load_bloom

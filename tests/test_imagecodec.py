@@ -306,3 +306,19 @@ class TestWav:
         assert out[1].n_frames == 32 and out[1].sample_rate == 16000
         assert out[1].sum_abs == int(np.abs(s).sum())
         assert out[2].n_frames is None and out[2].sum_abs is None
+
+
+@pytest.mark.parametrize("builder", ["_pgm_fixture_batches", "_wav_fixture_batches"])
+def test_fixture_builders_reject_negative_doc_ids(builder):
+    """The image/audio fixture builders use Python ``%`` (sign of the
+    divisor); the JVM and the DuckDB oracle take the sign of the dividend.
+    They agree only for ``doc_id >= 0``, so a negative id must raise."""
+    import pandas as pd
+
+    from embulk_input_marketo_spark.plans import queries
+
+    build = getattr(queries, builder)
+    ok = list(build([pd.DataFrame({"doc_id": [0, 3, 40]})]))
+    assert len(ok[0]) == 3
+    with pytest.raises(ValueError, match="doc_id >= 0"):
+        list(build([pd.DataFrame({"doc_id": [5, -3]})]))

@@ -1,6 +1,7 @@
-"""Write-ahead (pipelined) replay: staged writes overlap commits, commits
-publish strictly in slice order — final state, metadata invariants, crash
-reclamation and idempotence must all be byte-identical to sequential replay.
+"""Write-ahead replay: each merge-on-read slice is staged while the previous
+slice's commit publishes on a side thread, strictly in slice order. Final
+state, metadata invariants, crash reclamation and idempotence must all match
+a reference that merges one slice at a time with synchronous ``merge_batch``.
 """
 
 import glob
@@ -9,13 +10,19 @@ import re
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from embulk_input_marketo_spark import generator
-from embulk_input_marketo_spark.checkpoint import resume_hwm
-from embulk_input_marketo_spark.lake import LakeTable
+from embulk_input_marketo_spark.checkpoint import batch_id_for, resume_hwm
+from embulk_input_marketo_spark.lake import LakeTable, merge_batch
 from embulk_input_marketo_spark.lake.merge import (
     StaleStagedMergeError,
     commit_staged_merge,
     stage_merge,
+)
+from embulk_input_marketo_spark.operators.windows import (
+    bounded_scan,
+    slice_range,
 )
 from embulk_input_marketo_spark.replay import replay
 
@@ -42,6 +49,29 @@ def _mk(tmp_path, changelog_df, name):
                             key_col="url", n_buckets=16)
 
 
+def _reference_replay(spark, changelog_df, table, batch_span,
+                      compact_threshold=8, extract_text_from_html=False):
+    """The reference for write-ahead replay: every slice of the log from
+    lsn -1 goes through one synchronous ``merge_batch`` — no staging ahead,
+    no side thread."""
+    from embulk_input_marketo_spark.functions.textops import extract_text_arrow
+
+    max_lsn = changelog_df.agg(F.max("lsn")).first()[0]
+    derive = (
+        {"text": extract_text_arrow(F.col("html"))}
+        if extract_text_from_html else None
+    )
+    return [
+        merge_batch(
+            spark, table, bounded_scan(changelog_df, lo, hi),
+            batch_id=batch_id_for(table.path, lo, hi), lsn_col="lsn",
+            compact_threshold=compact_threshold, checkpoint={"hwm_lsn": hi},
+            window=(lo, hi), derive=derive,
+        )
+        for lo, hi in slice_range(-1, max_lsn, batch_span)
+    ]
+
+
 def _state_hash(spark, table):
     from embulk_input_marketo_spark.functions.compare import content_hash
 
@@ -49,40 +79,39 @@ def _state_hash(spark, table):
     return content_hash(table.read(spark).select(*cols), cols)
 
 
-@pytest.mark.parametrize("compact_threshold,depth", [
-    (8, True), (2, True), (8, "full"), (2, "full"),
-])
+@pytest.mark.parametrize("compact_threshold", [8, 2])
 def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
-                                           compact_threshold, depth):
-    """Same changelog through both paths, at both overlap depths (threshold
-    2 forces auto-compaction commits BETWEEN pipelined stage and commit —
-    the version-interleaving case the future-label headroom exists for)."""
+                                           compact_threshold):
+    """Same changelog through replay and the reference (threshold 2 forces
+    auto-compaction commits BETWEEN a slice's stage and its commit — the
+    version-interleaving case the future-label headroom exists for)."""
     seq = _mk(tmp_path, changelog, "seq")
     pipe = _mk(tmp_path, changelog, "pipe")
-    r1 = replay(spark, changelog, seq, batch_span=5_000,
-                compact_threshold=compact_threshold,
-                extract_text_from_html=True)
-    r2 = replay(spark, changelog, pipe, batch_span=5_000,
-                compact_threshold=compact_threshold,
-                extract_text_from_html=True, pipeline=depth)
-    assert len(r2.batches) == len(r1.batches) == 4
-    assert all(b.applied for b in r2.batches)
-    assert r2.end_hwm == r1.end_hwm
+    ref = _reference_replay(spark, changelog, seq, 5_000,
+                            compact_threshold=compact_threshold,
+                            extract_text_from_html=True)
+    r = replay(spark, changelog, pipe, batch_span=5_000,
+               compact_threshold=compact_threshold,
+               extract_text_from_html=True)
+    assert len(r.batches) == len(ref) == 4
+    assert all(b.applied for b in r.batches)
+    assert r.end_hwm == resume_hwm(seq)
+    assert [b.version for b in r.batches] == [b.version for b in ref]
     assert _state_hash(spark, pipe) == _state_hash(spark, seq)
 
 
 def test_pipelined_metadata_invariants(spark, changelog, tmp_path):
     """After the commit-time relabel, the on-disk layout must be exactly a
-    sequential merge's: every entry's generation id ``v`` equals the version
+    synchronous merge's: every entry's generation id ``v`` equals the version
     of a committed manifest, its path lives under a ``snap-{v:012d}-*`` dir
     of the SAME v, no dir carries a future (never-committed) label — i.e. no
-    pipelined staging dir leaked — and the set of per-version data dirs on
-    disk (committed generations + MoR-stranded pre-compaction ones, which
-    expiry owns) matches the sequential twin's."""
+    staging dir leaked — and the set of per-version data dirs on disk
+    (committed generations + MoR-stranded pre-compaction ones, which expiry
+    owns) matches the reference's."""
     table = _mk(tmp_path, changelog, "inv")
-    replay(spark, changelog, table, batch_span=5_000, pipeline="full")
+    replay(spark, changelog, table, batch_span=5_000, compact_threshold=2)
     seq = _mk(tmp_path, changelog, "inv_seq")
-    replay(spark, changelog, seq, batch_span=5_000)
+    _reference_replay(spark, changelog, seq, 5_000, compact_threshold=2)
     m = table.manifest()
     assert m.version == seq.manifest().version
     for b in set(m.files):
@@ -106,10 +135,10 @@ def test_pipelined_metadata_invariants(spark, changelog, tmp_path):
 
 def test_pipelined_rerun_noops_and_resumes(spark, changelog, tmp_path):
     table = _mk(tmp_path, changelog, "rerun")
-    r1 = replay(spark, changelog, table, batch_span=5_000, pipeline=True)
+    r1 = replay(spark, changelog, table, batch_span=5_000)
     hwm = resume_hwm(table)
     assert hwm == r1.end_hwm
-    r2 = replay(spark, changelog, table, batch_span=5_000, pipeline=True)
+    r2 = replay(spark, changelog, table, batch_span=5_000)
     assert r2.events_applied == 0 and not r2.batches  # skip-batch guard
 
 
@@ -131,13 +160,13 @@ def test_error_midway_reclaims_inflight_stage(spark, changelog, tmp_path,
 
     monkeypatch.setattr(replay_mod, "batch_id_for", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        replay(spark, changelog, table, batch_span=5_000, pipeline=True)
+        replay(spark, changelog, table, batch_span=5_000)
     monkeypatch.setattr(replay_mod, "batch_id_for", real)
     assert table.manifest().version == 0  # nothing published
     assert glob.glob(os.path.join(table.data_dir, "snap-*")) == []  # reclaimed
     seq = _mk(tmp_path, changelog, "crash_oracle")
-    replay(spark, changelog, seq, batch_span=5_000)
-    r = replay(spark, changelog, table, batch_span=5_000, pipeline=True)
+    _reference_replay(spark, changelog, seq, 5_000)
+    r = replay(spark, changelog, table, batch_span=5_000)
     assert all(b.applied for b in r.batches)
     assert _state_hash(spark, table) == _state_hash(spark, seq)
 
@@ -145,15 +174,11 @@ def test_error_midway_reclaims_inflight_stage(spark, changelog, tmp_path,
 def test_commit_staged_rechecks_idempotence(spark, changelog, tmp_path):
     """A batch that lands (by another writer / a racing rerun) between stage
     and commit must no-op AND reclaim its staged dir."""
-    from pyspark.sql import functions as F
-
     table = _mk(tmp_path, changelog, "race")
     batch = changelog.where(F.col("lsn") < 1000)
     staged = stage_merge(spark, table, batch, lsn_col="lsn",
                          label=table.manifest().version + 3)
     # the same logical batch commits first through the normal path
-    from embulk_input_marketo_spark.lake import merge_batch
-
     assert merge_batch(spark, table, batch, batch_id="dup",
                        lsn_col="lsn").applied
     r = commit_staged_merge(spark, table, staged, batch_id="dup")
@@ -164,8 +189,6 @@ def test_commit_staged_rechecks_idempotence(spark, changelog, tmp_path):
 
 
 def test_commit_staged_raises_on_schema_drift(spark, changelog, tmp_path):
-    from pyspark.sql import functions as F
-
     table = _mk(tmp_path, changelog, "drift")
     batch = changelog.where(F.col("lsn") < 1000)
     staged = stage_merge(spark, table, batch, lsn_col="lsn",

@@ -179,6 +179,34 @@ class TestSemanticPairsBackendEquivalence:
         assert key(np_pairs) == key(legacy)
         assert len(np_pairs) > 0  # non-vacuous
 
+    def test_inf_vectors_numpy_equals_join(self, spark):
+        """inf elements give NaN cosines (inf/inf, inf*0) without a zero
+        norm product, so neither backend raises. The join path keeps them
+        (``round(NaN, 6) >= threshold`` holds in Spark's double order); the
+        numpy path must emit the same pairs, with ``cos_sim = NaN``."""
+        inf = float("inf")
+        df = spark.createDataFrame(
+            [(1, [1.0, 2.0, 3.0, 4.0]), (2, [1.0, 2.0, 3.0, 4.0000001]),
+             (3, [inf, 1.0, 1.0, 1.0]), (4, [inf, 2.0, 0.0, 1.0]),
+             (5, [-inf, 1.0, 1.0, 1.0]), (6, [1.0, 0.0, 0.0, inf]),
+             (7, [2.0, 1.0, 0.0, 0.0]), (8, [1e200, 1e200, 1.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+        cents = spark.createDataFrame(
+            [(0, [1.0, 1.0, 1.0, 1.0])], "cell_id int, centroid array<double>"
+        )
+        got = {}
+        for backend, guard in (("numpy", 1000), ("join", None)):
+            rows = semantic_dedup_pairs(
+                df, threshold=0.5, centroids=cents, max_cell_size=guard
+            ).collect()
+            got[backend] = sorted(
+                (r["left_id"], r["right_id"], repr(r["cos_sim"])) for r in rows
+            )
+        assert got["numpy"] == got["join"]
+        assert any(c == "nan" for _, _, c in got["numpy"])  # non-vacuous
+        assert (1, 2, "1.0") in got["numpy"]
+
 
 class TestNumpyZeroNorm:
     def test_zero_norm_assigns_max_cell_and_pairs_nothing(self, spark):

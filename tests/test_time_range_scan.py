@@ -79,7 +79,7 @@ def test_major_stats_recorded_and_files_skipped(spark, tmp_path):
         spark, table,
         _batch(spark, [(f"c{i}", 300 + i, i, "I", 90 + i)  # days 300-304
                        for i in range(5)]),
-        batch_id="b3", lsn_col="lsn", pre_reduce=True,
+        batch_id="b3", lsn_col="lsn",
     )
     compact_buckets(spark, table, [0])
     m2 = table.manifest()
