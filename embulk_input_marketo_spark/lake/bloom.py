@@ -36,7 +36,8 @@ Design:
 - Hashing: double hashing over two JVM-side seeds —
   ``h1 = xxhash64(key)``, ``h2 = xxhash64(key, 1)``; bit i =
   ``(h1 + i*h2) mod m``. Probe-side hashes are computed by the SAME Spark
-  expressions (a tiny job), so driver/executor disagreement on xxhash64's
+  expressions (:func:`key_hashes`, folded by Catalyst over a one-row local
+  relation, so no job runs), so driver/executor disagreement on xxhash64's
   byte layout is impossible by construction.
 
 Sizing: ``m_bits`` is fixed at enable time (unions require it). Rule of
@@ -92,13 +93,35 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return ((bits[byte] & mask) != 0).all(axis=1)
 
 
-def hash_cols(key_col: str) -> list[F.Column]:
+def hash_cols(key: "str | F.Column") -> list[F.Column]:
     """The two JVM-side hash expressions every bloom producer AND prober
     uses — one definition, zero layout drift."""
     return [
-        F.xxhash64(F.col(key_col)).alias("_h1"),
-        F.xxhash64(F.col(key_col), F.lit(1)).alias("_h2"),
+        F.xxhash64(key).alias("_h1"),
+        F.xxhash64(key, F.lit(1)).alias("_h2"),
     ]
+
+
+def key_hashes(
+    spark: SparkSession, keys: Iterable, key_type, n_buckets: int = 1
+) -> list[tuple[int, int, int]]:
+    """(bucket, h1, h2) per key, by the SAME expressions the producers use
+    (``bucket_expr``, :func:`hash_cols`) over the keys as literals cast to
+    ``key_type``. They are projected over a one-row local relation, which
+    Catalyst folds into a ``LocalTableScan``: no Spark job, no Python
+    worker — the driver-side hashing of point probes."""
+    from embulk_input_marketo_spark.lake.table import bucket_expr
+
+    lits = [F.lit(kv).cast(key_type) for kv in keys]
+    if not lits:
+        return []
+    row = spark.sql("VALUES (0)").select(
+        F.array(
+            *[F.struct(bucket_expr(c, n_buckets).alias("b"), *hash_cols(c))
+              for c in lits]
+        ).alias("h")
+    ).collect()[0]
+    return [(r["b"], r["_h1"], r["_h2"]) for r in row["h"]]
 
 
 def build_bloom_deltas(
@@ -229,44 +252,62 @@ def bloom_health(table) -> dict:
     }
 
 
-def make_might_contain_udf(bblooms, bdata, m_bits: int, k: int):
-    """Arrow-batched membership prefilter for :meth:`LakeTable.exists_join`:
-    (bucket, h1, h2) → "might the table contain this key?". ``bblooms`` is a
-    broadcast {bucket: bloom bytes}, ``bdata`` a broadcast set of buckets
-    that hold data (a bucket with data but no bloom must stay a candidate —
-    unknown is never treated as absent)."""
+def candidate_buckets(
+    spark: SparkSession, hashed: DataFrame, blooms: dict[int, bytes],
+    with_data: set[int], m_bits: int, k: int,
+) -> set[int]:
+    """The buckets that may hold one of the probes hashed in ``hashed``
+    (columns ``_pb``, ``_h1``, ``_h2``, one row per non-null probe) — the
+    membership prefilter of :meth:`LakeTable.exists_join`. ``blooms`` maps
+    a bucket to its bloom bytes, ``with_data`` holds the buckets that hold
+    data: a bucket with data but no bloom stays a candidate (unknown is
+    never treated as absent).
 
-    @F.pandas_udf("boolean")
-    def _might(pb: pd.Series, h1: pd.Series, h2: pd.Series) -> pd.Series:
-        out = np.zeros(len(pb), dtype=bool)
-        bl = bblooms.value
-        dat = bdata.value
-        pbv = pb.to_numpy()
-        h1v = h1.to_numpy()
-        h2v = h2.to_numpy()
-        for b in np.unique(pbv[~pd.isna(pbv)]):
-            sel = pbv == b
-            bits = bl.get(int(b))
-            if bits is None:
-                out[sel] = int(b) in dat
-                continue
-            arr = np.frombuffer(bits, dtype=np.uint8)
-            pos = _positions(h1v[sel], h2v[sel], m_bits, k)
-            out[sel] = _test_bits(arr, pos)
-        return pd.Series(out)
+    One Arrow-batched pass in one job with no exchange: each task returns
+    its own distinct candidate buckets, so the driver collects at most
+    tasks × buckets rows, never one per probe."""
+    bblooms = spark.sparkContext.broadcast(blooms)
+    bdata = spark.sparkContext.broadcast(with_data)
 
-    return _might
+    def found(batches):
+        out: set[int] = set()
+        bl, dat = bblooms.value, bdata.value
+        for pdf in batches:
+            pbv = pdf["_pb"].to_numpy()
+            h1v = pdf["_h1"].to_numpy()
+            h2v = pdf["_h2"].to_numpy()
+            for b in np.unique(pbv):
+                b = int(b)
+                if b in out or b not in dat:
+                    continue
+                bits = bl.get(b)
+                if bits is None:
+                    out.add(b)
+                    continue
+                sel = pbv == b
+                pos = _positions(h1v[sel], h2v[sel], m_bits, k)
+                if _test_bits(np.frombuffer(bits, dtype=np.uint8), pos).any():
+                    out.add(b)
+        yield pd.DataFrame({"b": sorted(out)}, dtype="int32")
+
+    try:
+        rows = (
+            hashed.select("_pb", "_h1", "_h2")
+            .mapInPandas(found, "b int")
+            .collect()
+        )
+    finally:
+        bblooms.destroy()
+        bdata.destroy()
+    return {r["b"] for r in rows}
 
 
 def probe_hashes(
     spark: SparkSession, keys: Iterable, key_type: str = "string"
 ) -> list[tuple[int, int]]:
-    """(h1, h2) per probe key via the SAME Spark expressions producers use.
-    Driver-side helper for point probes (one tiny job, like
-    LakeTable.lookup's bucket computation)."""
-    df = spark.createDataFrame([(kv,) for kv in keys], f"k {key_type}")
-    rows = df.select(*hash_cols("k")).collect()
-    return [(r["_h1"], r["_h2"]) for r in rows]
+    """(h1, h2) per probe key via the SAME Spark expressions producers use
+    (:func:`key_hashes`: no job)."""
+    return [(h1, h2) for _b, h1, h2 in key_hashes(spark, keys, key_type)]
 
 
 def might_contain(

@@ -60,8 +60,21 @@ _PROMOTIONS = {
 }
 
 
-def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+def bucket_expr(key: "str | F.Column", n_buckets: int) -> F.Column:
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
+# exists_join broadcasts the probed buckets' blooms up to this many bytes;
+# over it the bloom prefilter is skipped (it bounds driver memory)
+_MAX_BLOOM_BROADCAST_BYTES = 256 << 20
+
+
+def _empty(spark: SparkSession, schema: "T.StructType | str") -> DataFrame:
+    """An empty frame the optimizer can see is empty: ``OptimizeLimitZero``
+    turns it into an empty ``LocalRelation`` and ``PropagateEmptyRelation``
+    folds it out of unions and joins. A bare ``createDataFrame([])`` is an
+    RDD scan instead, and scanning it runs a Python-worker job."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 # Internal columns stored in every data file alongside the user schema:
@@ -608,22 +621,14 @@ class LakeTable:
         m = self.manifest(version)
         if not m.bloom_conf:
             return None
-        key_t = m.current_schema()[m.key_col].dataType.simpleString()
-        row = (
-            spark.createDataFrame([(key,)], f"k {key_t}")
-            .select(
-                F.pmod(F.xxhash64(F.col("k")), F.lit(m.n_buckets))
-                .cast("int").alias("b"),
-                *B.hash_cols("k"),
-            )
-            .collect()[0]
-        )
-        ptr = m.bloom_ptrs.get(str(row["b"]))
+        key_t = m.current_schema()[m.key_col].dataType
+        ((b, h1, h2),) = B.key_hashes(spark, [key], key_t, m.n_buckets)
+        ptr = m.bloom_ptrs.get(str(b))
         if ptr is None:
             # bucket has data but no (complete) bloom — unknown, must read
-            return None if str(row["b"]) in set(m.files) else False
+            return None if str(b) in set(m.files) else False
         bits, mb, kk, _n = B.load_bloom(self.meta_dir, ptr)
-        return B.might_contain(bits, mb, kk, row["_h1"], row["_h2"])
+        return B.might_contain(bits, mb, kk, h1, h2)
 
     def exists_join(
         self,
@@ -631,89 +636,54 @@ class LakeTable:
         probes: DataFrame,
         probe_col: str,
         version: int | None = None,
-        max_bloom_broadcast_bytes: int = 256 << 20,
     ) -> DataFrame:
         """Distributed "which of these keys exist?" — the fetch-frontier
         question at batch scale. Returns ``probes`` + boolean ``exists``
-        (exists = a LIVE row; tombstoned keys answer False).
+        (exists = a LIVE row; tombstoned keys answer False), one output row
+        per probe row. Probes with NULL keys answer False.
 
-        Plan shape for 10^10 rows: (1) every probe hashes JVM-side to its
-        bucket + bloom positions; (2) the probed buckets' blooms broadcast
-        (bounded by ``max_bloom_broadcast_bytes`` — over it, the prefilter
-        is skipped, never partially applied) and an Arrow kernel drops
-        probes whose bucket bloom proves absence — for a mostly-new-urls
-        frontier that is MOST of them, before any data IO; (3) only
-        buckets still holding candidate probes are read (bucket pruning),
-        key column only, and a left-semi-style join flags the survivors.
-        Probes with NULL keys answer False."""
+        Plan shape for 10^10 rows: (1) one job, with no exchange, hashes
+        every non-null probe JVM-side to its bucket and bloom positions and
+        runs the bloom test in an Arrow kernel, each task returning only the
+        distinct buckets that may hold one of its probes — the table's
+        blooms are broadcast (up to ``_MAX_BLOOM_BROADCAST_BYTES``; over
+        it, the prefilter is skipped, never partially applied) and for
+        a mostly-new-urls frontier most buckets drop out before any data
+        IO; (2) the returned frame is ``probes LEFT JOIN`` the live keys of
+        those candidate buckets (bucket pruning, key column only). A bloom
+        has no false negatives, so a probe outside the candidate buckets
+        cannot match; a reduced read yields one row per key and a key lives
+        in one bucket, so the join needs no distinct and no second bloom
+        pass."""
         from embulk_input_marketo_spark.lake import bloom as B
 
         m = self.manifest(version)
         key_t = m.current_schema()[m.key_col].dataType
-        hashed = probes.withColumn(
-            "_pb",
-            F.pmod(F.xxhash64(F.col(probe_col).cast(key_t)), F.lit(m.n_buckets))
-            .cast("int"),
-        ).withColumn("_h1", F.xxhash64(F.col(probe_col).cast(key_t))).withColumn(
-            "_h2", F.xxhash64(F.col(probe_col).cast(key_t), F.lit(1))
+        probe = F.col(probe_col).cast(key_t)
+        hashed = probes.where(probe.isNotNull()).select(
+            bucket_expr(probe, m.n_buckets).alias("_pb"), *B.hash_cols(probe)
         )
-
-        pre = hashed
         conf = m.bloom_conf
         total_bloom_bytes = (
             (conf.get("m_bits", 0) // 8) * len(m.bloom_ptrs) if conf else 0
         )
-        if conf and 0 < total_bloom_bytes <= max_bloom_broadcast_bytes:
+        blooms: dict[int, bytes] = {}
+        if conf and 0 < total_bloom_bytes <= _MAX_BLOOM_BROADCAST_BYTES:
             blooms = {
-                int(b): B.load_bloom(self.meta_dir, p)[0]
+                int(b): B.load_bloom(self.meta_dir, p)[0].tobytes()
                 for b, p in m.bloom_ptrs.items()
             }
-            buckets_with_data = {int(b) for b in set(m.files)}
-            m_bits, kk = int(conf["m_bits"]), int(conf["k"])
-            bblooms = spark.sparkContext.broadcast(
-                {b: v.tobytes() for b, v in blooms.items()}
-            )
-            bdata = spark.sparkContext.broadcast(buckets_with_data)
-
-            _might = B.make_might_contain_udf(bblooms, bdata, m_bits, kk)
-
-            pre = hashed.withColumn(
-                "_cand",
-                F.when(F.col(probe_col).isNull(), F.lit(False)).otherwise(
-                    _might("_pb", "_h1", "_h2")
-                ),
-            )
-        else:
-            pre = hashed.withColumn(
-                "_cand",
-                F.col(probe_col).isNotNull()
-                & F.col("_pb").cast("string").isin(*set(m.files))
-                if set(m.files)
-                else F.lit(False),
-            )
-
-        cand_buckets = [
-            r["_pb"]
-            for r in pre.where(F.col("_cand")).select("_pb").distinct().collect()
-        ]
+        cand_buckets = B.candidate_buckets(
+            spark, hashed, blooms, {int(b) for b in set(m.files)},
+            int(conf.get("m_bits", 0)), int(conf.get("k", 0)),
+        )
         if not cand_buckets:
-            return pre.select(*probes.columns, F.lit(False).alias("exists"))
-        keys = (
-            self.read(
-                spark, version=version, buckets=cand_buckets,
-                columns=[m.key_col],
-            )
-            .select(F.col(m.key_col).cast(key_t).alias("__k"))
-            .distinct()
-            .withColumn("__hit", F.lit(True))
-        )
-        joined = pre.join(
-            keys,
-            F.col(probe_col).cast(key_t).eqNullSafe(F.col("__k"))
-            & F.col("_cand"),
-            "left",
-        )
-        return joined.select(
+            return probes.select(*probes.columns, F.lit(False).alias("exists"))
+        keys = self.read(
+            spark, version=version, buckets=sorted(cand_buckets),
+            columns=[m.key_col],
+        ).select(F.col(m.key_col).alias("__k"), F.lit(True).alias("__hit"))
+        return probes.join(keys, probe == F.col("__k"), "left").select(
             *probes.columns,
             F.coalesce(F.col("__hit"), F.lit(False)).alias("exists"),
         )
@@ -729,30 +699,25 @@ class LakeTable:
         files, and within them the key equality predicate pushes into the
         parquet scan (compaction writes buckets key-sorted, so row-group
         min/max skip to the key). The read-time LWW reduce still applies
-        when the bucket holds unmerged delta generations.
+        when the bucket holds unmerged delta generations; it runs over the
+        key's rows only, in one partition, so a present key costs one job.
 
-        With key blooms enabled (:meth:`enable_key_blooms`) an absent key
-        short-circuits to an empty result from the bucket's bloom alone —
-        no data file opened; the bucket id and both bloom hashes come from
-        the same single tiny job."""
+        The bucket id and both bloom hashes are computed on the driver
+        without a job (:func:`bloom.key_hashes`). With key blooms enabled
+        (:meth:`enable_key_blooms`) an absent key short-circuits to an
+        empty result from the bucket's bloom alone — no data file opened,
+        no job run."""
         from embulk_input_marketo_spark.lake import bloom as B
 
         m = self.manifest(version)
-        kc = F.lit(key).cast(m.current_schema()[m.key_col].dataType)
-        row = spark.range(1).select(
-            F.pmod(F.xxhash64(kc), F.lit(m.n_buckets)).cast("int").alias("b"),
-            F.xxhash64(kc).alias("_h1"),
-            F.xxhash64(kc, F.lit(1)).alias("_h2"),
-        ).collect()[0]
-        bucket = row["b"]
+        key_t = m.current_schema()[m.key_col].dataType
+        ((bucket, h1, h2),) = B.key_hashes(spark, [key], key_t, m.n_buckets)
         ptr = m.bloom_ptrs.get(str(bucket)) if m.bloom_conf else None
         if ptr is not None:
             bits, mb, kk, _n = B.load_bloom(self.meta_dir, ptr)
-            if not B.might_contain(bits, mb, kk, row["_h1"], row["_h2"]):
-                return spark.createDataFrame([], m.current_schema())
-        return self.read(
-            spark, version=version, buckets=[bucket], key_eq=key
-        ).where(F.col(m.key_col) == key)
+            if not B.might_contain(bits, mb, kk, h1, h2):
+                return _empty(spark, m.current_schema())
+        return self.read(spark, version=version, buckets=[bucket], key_eq=key)
 
     def changes(
         self,
@@ -770,17 +735,20 @@ class LakeTable:
         (the old row) and ``update_postimage`` (the new row), Delta CDF's
         kinds — so downstream incremental aggregates can subtract the old
         contribution and add the new without re-reading the base table. The
-        ``a.``-side columns already sit in the diff join, so the pre-image
-        costs one extra projection, no extra scan.
+        old side's winner already sits in the per-key aggregate, so the
+        pre-image costs one extra projection, no extra scan.
 
         Scale shape: the candidate set comes from a pure METADATA diff —
         only buckets whose file-list pointer changed between the snapshots
-        are read (a small batch's CDF touches its buckets, not the table);
-        both sides then LWW-reduce and full-outer join per key, classified
-        by the (lww_major, _lsn) order pair. Unchanged keys inside changed
-        buckets drop out (same _lsn on both sides)."""
-        from embulk_input_marketo_spark.operators.dedup import lww_dedup
-
+        are read (a small batch's CDF touches its buckets, not the table).
+        Every file either snapshot holds in those buckets is scanned ONCE,
+        each row tagged with the side(s) holding its file (a generation
+        both snapshots share is read once, not twice), and mapped to the
+        newer snapshot's schema. One per-key aggregate then takes both
+        sides' LWW winners — ``max_by`` over the (lww_major, _lsn) order
+        masked to NULL outside the side, which ``max_by`` skips — and the
+        pair of winners classifies the key. Unchanged keys inside changed
+        buckets drop out (same winner on both sides)."""
         ma = self.manifest(from_version)
         mb = self.manifest(to_version)
 
@@ -804,37 +772,53 @@ class LakeTable:
         data_cols = [f.name for f in cur.fields]
         key = mb.key_col
 
-        def side(m, tag):
-            raw = self._read_raw(spark, m, changed)
-            red = lww_dedup(
-                raw, key_cols=key, order_cols=[m.lww_major, "_lsn"]
+        # path -> (schema version, held by a, held by b)
+        held: dict[str, tuple[int, bool, bool]] = {}
+        for b in changed & set(ma.files):
+            for e in ma.files[b]:
+                held[e["path"]] = (int(e["sv"]), True, False)
+        for b in changed & set(mb.files):
+            for e in mb.files[b]:
+                held[e["path"]] = (int(e["sv"]), e["path"] in held, True)
+        groups: dict[tuple, list[str]] = {}
+        for path, (sv, in_a, in_b) in held.items():
+            # emitted in the NEWER snapshot's (consumer-facing) shape: map
+            # a file through mb's schema history and renames, unless mb
+            # does not know its schema version as written (the old side of
+            # a restore or of a reversed range) — then ma maps it and the
+            # columns align to mb's by name
+            sv_json = mb.schemas.get(str(sv))
+            known = sv_json is not None and (
+                in_b or ma.schemas.get(str(sv)) == sv_json
             )
-            # align to the NEW snapshot's schema (CDF is emitted in the
-            # consumer-facing, i.e. latest, shape)
-            have = {f.name for f in red.schema.fields}
-            cols = [
-                (F.col(f.name).cast(f.dataType) if f.name in have
-                 else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in cur.fields
-            ]
-            return red.select(
-                *cols,
-                F.col("_lsn").alias(f"_lsn_{tag}"),
-                F.col("_deleted").alias(f"_del_{tag}"),
-            )
+            groups.setdefault((known, sv, in_a, in_b), []).append(path)
+        full = T.StructType(list(cur.fields) + INTERNAL_FIELDS)
+        raw = self._scan(
+            spark, full,
+            [(mb if known else ma, sv, (in_a, in_b), paths)
+             for (known, sv, in_a, in_b), paths in sorted(groups.items())],
+            tag_fields=(T.StructField("_in_a", T.BooleanType()),
+                        T.StructField("_in_b", T.BooleanType())),
+        )
+        row = F.struct(
+            *[F.col(c) for c in data_cols if c != key], "_lsn", "_deleted"
+        )
+        order = F.struct(F.col(mb.lww_major), F.col("_lsn"))
+        j = raw.groupBy(key).agg(
+            F.max_by(row, F.when(F.col("_in_a"), order)).alias("_from"),
+            F.max_by(row, F.when(F.col("_in_b"), order)).alias("_to"),
+        )
 
-        a = side(ma, "a")
-        b = side(mb, "b")
-        on = a[key] == b[key]
-        j = a.alias("a").join(b.alias("b"), on, "full_outer")
-        live_a = F.col(f"a._del_a").isNotNull() & ~F.col("a._del_a")
-        live_b = F.col(f"b._del_b").isNotNull() & ~F.col("b._del_b")
+        def col(side, c):
+            return F.col(key) if c == key else F.col(f"{side}.{c}")
+
+        live_a = F.col("_from").isNotNull() & ~F.col("_from._deleted")
+        live_b = F.col("_to").isNotNull() & ~F.col("_to._deleted")
         change = (
             F.when(live_b & ~live_a, F.lit("insert"))
             .when(live_a & ~live_b, F.lit("delete"))
             .when(
-                live_a & live_b
-                & (F.col("a._lsn_a") != F.col("b._lsn_b")),
+                live_a & live_b & (F.col("_from._lsn") != F.col("_to._lsn")),
                 F.lit("update"),
             )
         )
@@ -842,8 +826,8 @@ class LakeTable:
             F.col("_change").isNotNull()
         )
         if include_preimage:
-            a_struct = F.struct(*[F.col(f"a.{c}").alias(c) for c in data_cols])
-            b_struct = F.struct(*[F.col(f"b.{c}").alias(c) for c in data_cols])
+            a_struct = F.struct(*[col("_from", c).alias(c) for c in data_cols])
+            b_struct = F.struct(*[col("_to", c).alias(c) for c in data_cols])
 
             def kind(k, row):
                 return F.struct(F.lit(k).alias("_k"), row.alias("_r"))
@@ -861,8 +845,8 @@ class LakeTable:
                 F.col("_e._k").alias("_change"),
             )
         picked = [
-            F.when(F.col("_change") == "delete", F.col(f"a.{c}"))
-            .otherwise(F.col(f"b.{c}"))
+            F.when(F.col("_change") == "delete", col("_from", c))
+            .otherwise(col("_to", c))
             .alias(c)
             for c in data_cols
         ]
@@ -1119,11 +1103,12 @@ class LakeTable:
         current schema + internal columns. May contain multiple versions per
         key (merge-on-read deltas) and tombstones.
 
-        ``key_eq``: a point-lookup key — file entries whose manifest-recorded
-        (kmin, kmax) range excludes it are SKIPPED before any scan is
-        planned (Iceberg manifest file stats; the stats are written
-        conservatively, so skipping is sound — see merge._file_key_stats).
-        Entries without stats are always read.
+        ``key_eq``: a point-lookup key — only that key's rows are returned.
+        File entries whose manifest-recorded (kmin, kmax) range excludes it
+        are SKIPPED before any scan is planned (Iceberg manifest file stats;
+        the stats are written conservatively, so skipping is sound — see
+        merge._file_key_stats; entries without stats are always read), and
+        the key predicate filters the rows of the files that are read.
 
         ``major_range_us``: closed epoch-micros range on the lww-major
         column — file entries whose (tmin, tmax) lie wholly outside are
@@ -1166,17 +1151,44 @@ class LakeTable:
                 if excluded(e):
                     continue
                 groups.setdefault(int(e["sv"]), []).append(e["path"])
-        if not groups:
-            return spark.createDataFrame([], full_schema)
+        out = self._scan(
+            spark, full_schema,
+            [(m, sv, (), paths) for sv, paths in sorted(groups.items())],
+        )
+        if key_eq is not None:
+            out = out.where(F.col(m.key_col) == key_eq)
+        return out
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        full_schema: T.StructType,
+        groups: list[tuple[Manifest, int, tuple, list[str]]],
+        tag_fields: tuple[T.StructField, ...] = (),
+    ) -> DataFrame:
+        """One parquet scan per group ``(m, sv, tags, paths)``, unioned: the
+        files ``paths`` were written under schema version ``sv`` of manifest
+        ``m``, whose schema history and renames map them to ``full_schema``;
+        ``tags`` are the group's values of the literal columns
+        ``tag_fields`` appended to every row. No group: an :func:`_empty`
+        frame of the same columns."""
         parts: list[DataFrame] = []
-        for sv, paths in sorted(groups.items()):
+        for m, sv, tags, paths in groups:
             file_schema = T.StructType(
                 list(T.StructType.fromJson(m.schemas[str(sv)]).fields)
                 + INTERNAL_FIELDS
             )
             df = spark.read.schema(file_schema).parquet(*paths)
             df = self._map_to_current(df, sv, m, full_schema)
-            parts.append(df)
+            parts.append(df.select(
+                "*",
+                *[F.lit(v).cast(f.dataType).alias(f.name)
+                  for f, v in zip(tag_fields, tags)],
+            ))
+        if not parts:
+            return _empty(
+                spark, T.StructType(list(full_schema.fields) + list(tag_fields))
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1192,9 +1204,12 @@ class LakeTable:
         major_range: tuple[Any, Any] | None = None,
         columns: list[str] | None = None,
     ) -> DataFrame:
-        """Read a snapshot (optionally only some buckets — bucket pruning;
-        ``key_eq`` additionally skips files whose manifest key range
-        excludes the key — the point-lookup path).
+        """Read a snapshot (optionally only some buckets — bucket pruning).
+
+        ``key_eq``: the point-lookup path — only that key's rows come back.
+        Files whose manifest key range excludes the key are skipped, the
+        key predicate filters the rest, and a merge-on-read bucket reduces
+        the key's rows in one partition, with no exchange.
 
         ``columns``: narrow projection pushed BELOW the merge-on-read
         reduce — the LWW aggregate packs its input into an opaque max_by
@@ -1288,10 +1303,15 @@ class LakeTable:
             columns=columns,
         )
         if dirty:
+            raw = self._read_raw(
+                spark, m, dirty, key_eq=key_eq, columns=columns
+            )
+            if key_eq is not None:
+                # one key's rows: reduce them in one task — the aggregate's
+                # clustering is then met without an exchange (one job)
+                raw = raw.coalesce(1)
             reduced = lww_dedup(
-                self._read_raw(spark, m, dirty, key_eq=key_eq, columns=columns),
-                key_cols=m.key_col,
-                order_cols=[m.lww_major, "_lsn"],
+                raw, key_cols=m.key_col, order_cols=[m.lww_major, "_lsn"]
             )
             out = out.unionByName(reduced.select(*out.columns))
         out = out.where(~F.col("_deleted")).drop("_lsn", "_deleted")
@@ -1397,7 +1417,7 @@ class LakeTable:
 
         sc = spark.sparkContext
         if not work:
-            return spark.createDataFrame([], schema)
+            return _empty(spark, schema)
         par = max(1, min(len(work), sc.defaultParallelism))
         return spark.createDataFrame(
             sc.parallelize(work, par).mapPartitions(read_lists), schema

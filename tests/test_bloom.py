@@ -184,21 +184,53 @@ def test_expiry_reclaims_dead_bloom_sides(spark, table):
         assert table.might_contain(spark, k) is True, k
 
 
+def _numeric_keys(spark, t):
+    """String keys that read as integers: 7 and 42 live, 13 tombstoned."""
+    merge_batch(
+        spark, t,
+        _batch(spark, [("7", "I"), ("42", "I"), ("13", "I")], base=6000),
+        "num1",
+    )
+    merge_batch(spark, t, _batch(spark, [("13", "D")], base=7000), "num2")
+
+
+def _exists(spark, t, probes):
+    return sorted(
+        ((r["probe"], r["exists"])
+         for r in t.exists_join(spark, probes, "probe").collect()),
+        key=repr,
+    )
+
+
+def _int_probe_answers(spark, t):
+    """An int probe column against string keys: the cast path."""
+    probes = spark.createDataFrame(
+        [(7,), (42,), (13,), (99,), (None,), (7,)], "probe int"
+    )
+    assert _exists(spark, t, probes) == sorted(
+        [(7, True), (7, True), (42, True), (13, False), (99, False),
+         (None, False)],
+        key=repr,
+    )
+
+
 def test_exists_join_matches_ground_truth(spark, table):
+    _numeric_keys(spark, table)
     probes = spark.createDataFrame(
         [("u0",), ("u49",), ("v19",), ("gone",), ("absent1",),
-         ("absent2",), (None,)],
+         ("absent2",), (None,), ("u49",), ("u49",), (None,)],
         "probe string",
     )
-    got = {
-        r["probe"]: r["exists"]
-        for r in table.exists_join(spark, probes, "probe").collect()
-    }
-    assert got == {
-        "u0": True, "u49": True, "v19": True,
-        "gone": False,  # tombstoned = not live
-        "absent1": False, "absent2": False, None: False,
-    }
+    # one output row per probe row: a repeated probe answers each time
+    assert _exists(spark, table, probes) == sorted(
+        [("u0", True), ("u49", True), ("u49", True), ("u49", True),
+         ("v19", True),
+         ("gone", False),  # tombstoned = not live
+         ("absent1", False), ("absent2", False), (None, False),
+         (None, False)],
+        key=repr,
+    )
+    _int_probe_answers(spark, table)
 
 
 def test_exists_join_without_blooms_same_answers(tmp_path, spark):
@@ -207,14 +239,38 @@ def test_exists_join_without_blooms_same_answers(tmp_path, spark):
         lww_major="warc_ts", n_buckets=4,
     )
     merge_batch(spark, t, _batch(spark, [("a", "I"), ("b", "I"), ("c", "D")]), "b1")
+    _numeric_keys(spark, t)
     probes = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("d",), (None,)], "probe string"
+        [("a",), ("b",), ("c",), ("d",), (None,), ("a",), ("a",)],
+        "probe string",
     )
-    got = {
-        r["probe"]: r["exists"]
-        for r in t.exists_join(spark, probes, "probe").collect()
-    }
-    assert got == {"a": True, "b": True, "c": False, "d": False, None: False}
+    assert _exists(spark, t, probes) == sorted(
+        [("a", True), ("a", True), ("a", True), ("b", True), ("c", False),
+         ("d", False), (None, False)],
+        key=repr,
+    )
+    _int_probe_answers(spark, t)
+
+
+def test_exists_join_over_bloom_cap_skips_prefilter(spark, table, monkeypatch):
+    """Blooms over the broadcast cap are not loaded at all (the cap bounds
+    driver memory); the answers stay exact."""
+    from embulk_input_marketo_spark.lake import table as table_mod
+
+    loads = []
+    real_load = B.load_bloom
+    monkeypatch.setattr(
+        B, "load_bloom", lambda *a: loads.append(a) or real_load(*a))
+    monkeypatch.setattr(table_mod, "_MAX_BLOOM_BROADCAST_BYTES", 1)
+    probes = spark.createDataFrame(
+        [("u0",), ("v19",), ("gone",), ("absent1",), (None,)], "probe string"
+    )
+    assert _exists(spark, table, probes) == sorted(
+        [("u0", True), ("v19", True), ("gone", False), ("absent1", False),
+         (None, False)],
+        key=repr,
+    )
+    assert loads == []
 
 
 def test_manifest_json_compat_without_blooms(tmp_path, spark):
