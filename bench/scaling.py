@@ -1087,8 +1087,8 @@ Config: pyspark {pyspark.__version__}, AQE on (coalesce+skewJoin),
 shuffle.partitions = 2×cores, maxPartitionBytes=128MB, parquet codec lz4
 (measured: java-snappy's write path scaled at 0.57 efficiency 2→8 cores vs
 lz4's 0.79, and lz4 is ~40% faster absolute), lake n_buckets=64, merge
-mode=mor compact_threshold=8, salt off (map-side partial aggregation
-handles the hot keys; salting available for pathological single-key skew).
+mode=mor compact_threshold=8 (merge and compaction reduce inside their one
+bucket exchange, unsalted).
 Host: 32 cores, 125 GiB RAM.
 """
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:

@@ -20,12 +20,17 @@ Physical strategy, chosen for 10^10-event scale:
    are read and rewritten (copy-on-write bounded by batch key spread, not
    table size).
 2. new bucket contents = LWW-reduce( old_bucket_rows ∪ batch_rows ) — a
-   hash aggregate per (bucket, key) instead of a join, run in the write
-   stage behind the one exchange that places rows by bucket; associative/
+   hash aggregate per (bucket, key) instead of a join; associative/
    commutative because (warc_ts, _lsn) totally orders rows per key.
 3. results written partitioned-by-bucket into a fresh snapshot directory;
    the commit (new files + batch_id + checkpoint advance) is one atomic
    manifest swap.
+
+Every operation that rewrites whole buckets — the copy-on-write fold,
+compaction, vacuum, ``delete_where`` and rehash — writes through one
+primitive, :func:`_write_reduced` (steps 2-3: one exchange, the reduce in the
+write stage, one file per bucket); the four maintenance rewrites also share
+one commit tail, :func:`_rewrite_buckets`.
 
 Idempotence: ``batch_id`` already in the manifest → no-op. This is the
 exactly-once the reference lacks (it re-downloads and re-emits on retry,
@@ -35,7 +40,6 @@ exactly-once the reference lacks (it re-downloads and re-emits on retry,
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass
 from typing import Any
 
@@ -43,7 +47,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from embulk_input_marketo_spark.lake import fsio
-from embulk_input_marketo_spark.lake.table import LakeTable, Manifest, bucket_expr
+from embulk_input_marketo_spark.lake.table import (
+    FileSet,
+    LakeTable,
+    Manifest,
+    bucket_expr,
+)
 from embulk_input_marketo_spark.operators.dedup import lww_dedup
 
 
@@ -153,8 +162,9 @@ def _commit_bookkeeping(
     return live, new_ckpt
 
 
-# per-(partition-count) salt tables for _granule_exchange, computed once per
-# process from Spark's own hash (a tiny job) and reused for every batch
+# per-(partition-count) salt tables for the exchanges that place rows by
+# bucket (_granule_exchange, _write_reduced), asked from Spark's own hash
+# once per process and reused for every batch
 _GRANULE_SALTS: dict[int, list[int]] = {}
 
 
@@ -162,26 +172,27 @@ def _granule_salts(spark: SparkSession, g: int) -> list[int]:
     """For each granule class c in 0..g-1, an int salt whose Spark
     murmur3 hash lands in exchange partition c under HashPartitioning(g) —
     found by asking SPARK for its own hash values (zero risk of a Python
-    reimplementation drifting from the JVM), cached per process."""
+    reimplementation drifting from the JVM), cached per process. The
+    candidates' hashes are literals projected over a one-row local
+    relation, which Catalyst folds into a ``LocalTableScan``: no Spark job
+    (as ``bloom.key_hashes``), so a caller's job count never depends on
+    which counts the process has already seen."""
     got = _GRANULE_SALTS.get(g)
     if got is not None:
         return got
     salts: list[int | None] = [None] * g
-    need = g
     lo = 0
-    while need:
-        cand = spark.range(lo, lo + max(64 * g, 1024)).select(
-            F.col("id").cast("int").alias("v"),
-            F.pmod(F.hash(F.col("id").cast("int")), F.lit(g)).alias("c"),
-        ).collect()
-        for r in cand:
-            c = int(r["c"])
+    while None in salts:
+        span = range(lo, lo + max(8 * g, 64))
+        # one SQL string: a py4j round trip per candidate would cost more
+        # than the search
+        (classes,) = spark.sql("VALUES (0)").select(F.expr(
+            "array(%s)" % ",".join(f"pmod(hash({v}), {g})" for v in span)
+        )).collect()[0]
+        for v, c in zip(span, classes):
             if salts[c] is None:
-                salts[c] = int(r["v"])
-                need -= 1
-                if not need:
-                    break
-        lo += max(64 * g, 1024)
+                salts[c] = v
+        lo = span.stop
     _GRANULE_SALTS[g] = salts  # type: ignore[assignment]
     return salts  # type: ignore[return-value]
 
@@ -387,7 +398,6 @@ def merge_batch(
     batch_id: str,
     op_col: str = "op",
     lsn_col: str = "_lsn",
-    salt_buckets: int | None = None,
     mode: str = "mor",
     compact_threshold: int = 8,
     checkpoint: dict[str, Any] | None = None,
@@ -432,13 +442,6 @@ def merge_batch(
     batch is evaluated twice (a narrow counting pre-pass, then the write),
     so it must be deterministic: a batch whose plan is not raises
     ValueError before anything is written.
-
-    salt_buckets: optional extra pre-split of hot keys in the mor
-    compactions. Spark's map-side partial aggregation
-    already caps per-key reducer input at one row per map partition, so the
-    salt phase (an extra shuffle) is only worth it for pathological
-    single-key skew; default off. cow ignores it: its fold reduces in the
-    write's one bucket exchange.
 
     derive: optional {column: Column} of DERIVED schema columns computed
     AFTER the bucket exchange, in the write tasks — the column rides the
@@ -490,7 +493,7 @@ def merge_batch(
     )
     return _commit_mor(
         spark, table, m, staged, batch_id, mode, compact_threshold,
-        checkpoint, window, channel, lineage, publish, salt_buckets,
+        checkpoint, window, channel, lineage, publish,
     )
 
 
@@ -673,7 +676,6 @@ def _commit_mor(
     channel: tuple[str, int] | None,
     lineage: dict[str, Any] | None,
     publish: bool,
-    salt_buckets: int | None,
 ) -> MergeResult:
     """merge-on-read COMMIT: driver bookkeeping + atomic manifest swap for a
     :class:`StagedMerge`, against manifest ``m``. A direct
@@ -725,15 +727,7 @@ def _commit_mor(
         bucket_bytes[bk] = bucket_bytes.get(bk, 0) + _bytes_of(entries)
 
     applied, ckpt = _commit_bookkeeping(m, batch_id, checkpoint, window, channel)
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=m.n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
+    nm = m.evolve(
         files=files,
         applied_batches=applied,
         checkpoint=ckpt,
@@ -748,8 +742,6 @@ def _commit_mor(
             "mode": mode,
             "lineage": lineage or {},
         },
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
         bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
         bucket_bytes=bucket_bytes,
     )
@@ -770,7 +762,7 @@ def _commit_mor(
     over = [b for b in touched if len(files.pending[str(b)]) >= compact_threshold]
     version = nm.version
     if over:
-        version = compact_buckets(spark, table, over, salt_buckets)
+        version = compact_buckets(spark, table, over)
 
     return MergeResult(
         True, version, rows_in, rows_in - rows_deleted, rows_deleted,
@@ -827,7 +819,6 @@ def commit_staged_merge(
     channel: tuple[str, int] | None = None,
     lineage: dict[str, Any] | None = None,
     publish: bool = True,
-    salt_buckets: int | None = None,
 ) -> MergeResult:
     """Publish a :func:`stage_merge` result against the CURRENT manifest.
 
@@ -850,7 +841,7 @@ def commit_staged_merge(
         )
     return _commit_mor(
         spark, table, m, staged, batch_id, mode, compact_threshold,
-        checkpoint, window, channel, lineage, publish, salt_buckets,
+        checkpoint, window, channel, lineage, publish,
     )
 
 
@@ -947,10 +938,9 @@ def _merge_cow(
 
     Two passes over the batch, which may carry several rows per key: the
     pre-pass (:func:`_cow_prepass`), which counts LWW winners per bucket,
-    and the write, whose one exchange places the batch and base rows by
-    bucket and reduces them per (bucket, key) in the same stage. Nothing is
-    cached in between, so the batch is evaluated twice and must be
-    deterministic; a batch whose plan is not is rejected.
+    and the write of the batch and base rows through :func:`_write_reduced`.
+    Nothing is cached in between, so the batch is evaluated twice and must
+    be deterministic; a batch whose plan is not is rejected.
 
     Blooms are never rebuilt from the written files: a touched bucket's new
     bloom is its old bloom | the batch's keys, which equals a rebuild
@@ -995,35 +985,14 @@ def _merge_cow(
     # and append as a fresh generation
     rows = batch_full.where(F.col(key).isNotNull()).select(*full_cols, "_b")
     if fold_buckets:
-        old = table.read(
-            spark, buckets=fold_buckets, include_internal=True
-        ).withColumn("_b", bucket_expr(key, m.n_buckets))
-        rows = rows.unionByName(old.select(*full_cols, "_b"))
-    # ONE exchange: HashPartitioning(_b) already satisfies the
-    # (_b, key) grouping, so the LWW reduce of batch and base rows runs in
-    # the write stage, with no map-side combine. Raw batch rows ride it: a
-    # perfbench trickle_reads slice is 1,000 rows over ~320 keys (3.2 per
-    # key) against ~1,450 base rows, so the exchange moves ~1.4x the rows
-    # of a pre-deduped batch. Its map stage took ~25 ms longer per call on
-    # 4 cores, less than the extra job a combine ahead of it costs.
-    merged = lww_dedup(
-        rows.repartition(max(len(touched), 1), F.col("_b")),
-        key_cols=["_b", key],
-        order_cols=[m.lww_major, "_lsn"],
-    )
-    new_version = m.version + 1
-    staging = table.snapshot_staging_dir(new_version)
-    _ensure_stats_friendly_writes(spark)
-    (
-        # key-sorted for parquet min/max skipping (see compact_buckets)
-        merged.sortWithinPartitions(key)
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(staging)
-    )
-    new_files = _enumerate_bucket_files(
-        staging, m.schema_version, new_version, reduced=True,
-        stats_col=m.key_col, major_col=m.lww_major,
+        rows = rows.unionByName(_bucket_rows(spark, table, m, fold_buckets))
+    # Raw batch rows ride the write's one exchange, with no map-side
+    # combine: a perfbench trickle_reads slice is 1,000 rows over ~320 keys
+    # (3.2 per key) against ~1,450 base rows, so the exchange moves ~1.4x
+    # the rows of a pre-deduped batch. Its map stage took ~25 ms longer per
+    # call on 4 cores, less than the extra job a combine ahead of it costs.
+    new_version, staging, new_files = _write_reduced(
+        spark, table, m, rows, touched, sort_cols=[key]
     )
     files = m.files.with_updates(
         {
@@ -1045,15 +1014,7 @@ def _merge_cow(
             bucket_bytes.get(str(b), 0) + add if b in append_set else add
         )
     applied, ckpt = _commit_bookkeeping(m, batch_id, checkpoint, window, channel)
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=m.n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
+    nm = m.evolve(
         files=files,
         applied_batches=applied,
         checkpoint=ckpt,
@@ -1070,8 +1031,6 @@ def _merge_cow(
             "mode": "cow",
             "lineage": lineage or {},
         },
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
         bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
         bucket_bytes=bucket_bytes,
     )
@@ -1148,47 +1107,68 @@ def _zorder_sort_key(df, zorder_by: list[str]):
     return zorder.zorder_key(dims[0], dims[1])
 
 
-def compact_buckets(
+def _bucket_rows(
     spark: SparkSession,
     table: LakeTable,
-    buckets: list[int],
-    salt_buckets: int | None = None,
-    zorder_by: list[str] | None = None,
-) -> int:
-    """Fold the given buckets' delta generations into one reduced generation
-    (metadata + data rewrite of ONLY those buckets). Idempotent; keeps
-    tombstones (vacuum_tombstones reclaims those).
+    m: Manifest,
+    buckets: list[int] | None = None,
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """Every file generation of ``buckets`` (all when None), raw: several
+    rows per key, tombstones, ``_lsn``/``_deleted``, and ``_b`` under
+    ``n_buckets`` (default: the manifest's count) — a rewrite's input."""
+    return table.read(spark, buckets=buckets, include_internal=True).withColumn(
+        "_b", bucket_expr(m.key_col, n_buckets or m.n_buckets)
+    )
 
-    ``zorder_by``: exactly two data columns — compacted files are written
-    in Morton z-order of those dimensions instead of plain key order
-    (functions/zorder.py), so range predicates on EITHER column skip row
-    groups; the merge key rides as the tiebreak sort so point lookups keep
-    usable (looser) min/max. Plain key-sort remains the default."""
-    m = table.manifest()
-    data_cols = [f.name for f in m.current_schema().fields]
-    full_cols = data_cols + ["_lsn", "_deleted"]
-    raw = table.read(spark, buckets=buckets, include_internal=True).withColumn(
-        "_b", bucket_expr(m.key_col, m.n_buckets)
-    )
-    reduced = lww_dedup(
-        raw.select(*full_cols, "_b"),
-        key_cols=m.key_col,
+
+def _write_reduced(
+    spark: SparkSession,
+    table: LakeTable,
+    m: Manifest,
+    rows: DataFrame,
+    buckets: list[int],
+    *,
+    sort_cols: list,
+    keep: Any = None,
+) -> tuple[int, str, dict[str, list[dict]]]:
+    """The one bucket-rewrite write: LWW-reduce ``rows`` (the table's
+    columns, ``_lsn``, ``_deleted`` and ``_b``; any number per key) to one
+    row per key, and write each of ``buckets`` as ONE reduced generation
+    into a fresh staging dir named for ``m.version + 1``. Returns
+    ``(new_version, staging, new_files)``; the caller commits.
+
+    - One exchange places the rows: bucket i of ``sorted(buckets)`` goes to
+      partition i, by a salt whose Spark hash lands there
+      (:func:`_granule_salts`). Every write task holds exactly one bucket
+      and writes one file for it; plain ``repartition(n, _b)`` would put
+      several buckets in one task and leave others empty.
+    - The reduce groups by ``(_gr, _b, key)``. ``HashPartitioning(_gr)``
+      already satisfies that grouping, so it runs in the write stage with
+      no second exchange. ``_gr`` and ``_b`` are functions of the key, so
+      the winners are those of a reduce on the key alone.
+    - ``keep``: an optional predicate on the winners — vacuum's tombstone
+      reclaim, which does not commute with the reduce.
+    - ``sort_cols`` order the rows within each file: the key, for tight
+      parquet min/max on point lookups, or a z-order key then the key."""
+    order = sorted({int(b) for b in buckets}) or [0]
+    salts = _granule_salts(spark, len(order))
+    # the bucket → salt table ships as one SQL literal (one py4j call)
+    gr = F.expr("element_at(map(%s), _b)" % ",".join(
+        f"{b}, {salt}" for b, salt in zip(order, salts)
+    ))
+    won = lww_dedup(
+        rows.withColumn("_gr", gr).repartition(len(order), "_gr"),
+        key_cols=["_gr", "_b", m.key_col],
         order_cols=[m.lww_major, "_lsn"],
-        salt_buckets=salt_buckets,
-    )
+    ).drop("_gr")
+    if keep is not None:
+        won = won.where(keep)
     new_version = m.version + 1
     staging = table.snapshot_staging_dir(new_version)
     _ensure_stats_friendly_writes(spark)
-    if zorder_by is None:
-        # key-sorted within each bucket: compacted files carry tight
-        # parquet min/max on the merge key, so a point lookup reads one
-        # bucket AND skips to the row groups covering the key
-        sort_cols = [F.col(m.key_col)]
-    else:
-        sort_cols = [_zorder_sort_key(reduced, zorder_by), F.col(m.key_col)]
     (
-        reduced.repartition(max(len(buckets), 1), F.col("_b"))
-        .sortWithinPartitions(*sort_cols)
+        won.sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
         .partitionBy("_b")
         .parquet(staging)
@@ -1197,35 +1177,86 @@ def compact_buckets(
         staging, m.schema_version, new_version, reduced=True,
         stats_col=m.key_col, major_col=m.lww_major,
     )
-    files = m.files.with_updates(
-        {str(b): new_files.get(str(b), []) for b in buckets}
+    return new_version, staging, new_files
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    table: LakeTable,
+    m: Manifest,
+    rows: DataFrame,
+    buckets: list[int],
+    summary: dict[str, Any],
+    *,
+    sort_cols: list | None = None,
+    keep: Any = None,
+    full: bool = False,
+    n_buckets: int | None = None,
+) -> int:
+    """Rewrite ``buckets`` from ``rows`` (:func:`_write_reduced`, sorted by
+    the key unless ``sort_cols`` says otherwise) and commit: the tail that
+    compaction, vacuum, ``delete_where`` and rehash share. Returns the new
+    version.
+
+    The rewritten buckets' file lists and byte totals are replaced, and
+    their blooms rebuilt from the written files: a rewrite can shed keys
+    (vacuum) or move them (rehash). ``full``: the rewrite is the whole
+    table, so its buckets replace every bucket list, bloom and byte total;
+    otherwise the untouched buckets carry forward. ``n_buckets``: the new
+    bucket count (rehash)."""
+    new_version, staging, new_files = _write_reduced(
+        spark, table, m, rows, buckets,
+        sort_cols=sort_cols or [F.col(m.key_col)], keep=keep,
     )
-    bloom_updates = _bloom_ptr_updates(
-        spark, table, m, new_files, new_version, mode="rebuild"
+    if full:
+        rewritten, kept_ptrs, kept_bytes = new_files, {}, {}
+        files = FileSet.replace_all(table.meta_dir, rewritten)
+    else:
+        rewritten = {str(b): new_files.get(str(b), []) for b in buckets}
+        kept_ptrs, kept_bytes = m.bloom_ptrs, m.bucket_bytes
+        files = m.files.with_updates(rewritten)
+    blooms = _bloom_ptr_updates(
+        spark, table, m, new_files, new_version, mode="rebuild",
+        n_buckets=n_buckets,
     )
-    bucket_bytes = dict(m.bucket_bytes)
-    for b in buckets:
-        bucket_bytes[str(b)] = _bytes_of(new_files.get(str(b), []))
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=m.n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
+    table.commit(m.evolve(
+        n_buckets=n_buckets or m.n_buckets,
         files=files,
-        applied_batches=m.applied_batches,
-        checkpoint=m.checkpoint,
-        summary={"operation": "compact", "buckets": [int(b) for b in buckets]},
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
-        bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
-        bucket_bytes=bucket_bytes,
-    )
-    table.commit(nm, staging)
+        summary=summary,
+        bloom_ptrs={**kept_ptrs, **blooms},
+        bucket_bytes={
+            **kept_bytes, **{b: _bytes_of(es) for b, es in rewritten.items()}
+        },
+    ), staging)
     return new_version
+
+
+def compact_buckets(
+    spark: SparkSession,
+    table: LakeTable,
+    buckets: list[int],
+    zorder_by: list[str] | None = None,
+) -> int:
+    """Fold the given buckets' delta generations into one reduced generation
+    (metadata + data rewrite of ONLY those buckets, through
+    :func:`_rewrite_buckets`). Idempotent; keeps tombstones
+    (vacuum_tombstones reclaims those).
+
+    ``zorder_by``: exactly two data columns — compacted files are written
+    in Morton z-order of those dimensions instead of plain key order
+    (functions/zorder.py), so range predicates on EITHER column skip row
+    groups; the merge key rides as the tiebreak sort so point lookups keep
+    usable (looser) min/max. Plain key-sort remains the default."""
+    m = table.manifest()
+    rows = _bucket_rows(spark, table, m, buckets)
+    sort_cols = None
+    if zorder_by is not None:
+        sort_cols = [_zorder_sort_key(rows, zorder_by), F.col(m.key_col)]
+    return _rewrite_buckets(
+        spark, table, m, rows, buckets,
+        {"operation": "compact", "buckets": [int(b) for b in buckets]},
+        sort_cols=sort_cols,
+    )
 
 
 def vacuum_tombstones(
@@ -1238,66 +1269,23 @@ def vacuum_tombstones(
     (warc_ts) is older than ``watermark_major`` — no future event can carry
     a smaller order key than the lateness watermark, so those deletes can
     never lose a conflict again. Rewrites every bucket (run occasionally,
-    like Iceberg compaction)."""
+    like Iceberg compaction) through :func:`_rewrite_buckets`; the reclaim
+    is its ``keep`` predicate, applied to the reduce's winners. Blooms are
+    rebuilt wholesale, so vacuumed keys leave the filter."""
     m = table.manifest()
-    data_cols = [f.name for f in m.current_schema().fields]
-    raw = table.read(spark, include_internal=True)
-    full = lww_dedup(
-        raw, key_cols=m.key_col, order_cols=[m.lww_major, "_lsn"]
-    ).withColumn("_b", bucket_expr(m.key_col, m.n_buckets))
-    keep = full.where(
-        (~F.col("_deleted")) | (F.col(m.lww_major) >= F.lit(watermark_major))
+    keep = (~F.col("_deleted")) | (F.col(m.lww_major) >= F.lit(watermark_major))
+    return _rewrite_buckets(
+        spark, table, m, _bucket_rows(spark, table, m),
+        [int(b) for b in m.files],
+        {"operation": "vacuum_tombstones", "watermark": str(watermark_major)},
+        keep=keep, full=True,
     )
-    new_version = m.version + 1
-    staging = table.snapshot_staging_dir(new_version)
-    _ensure_stats_friendly_writes(spark)
-    (
-        keep.select(*data_cols, "_lsn", "_deleted", "_b")
-        .repartition(m.n_buckets, F.col("_b"))
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(staging)
-    )
-    from embulk_input_marketo_spark.lake.table import FileSet
-
-    vac_files = _enumerate_bucket_files(
-        staging, m.schema_version, new_version, reduced=True,
-        stats_col=m.key_col, major_col=m.lww_major,
-    )
-    files = FileSet.replace_all(table.meta_dir, vac_files)
-    # full rewrite: blooms rebuilt wholesale (vacuumed keys leave the filter)
-    bloom_updates = _bloom_ptr_updates(
-        spark, table, m, vac_files, new_version, mode="rebuild"
-    )
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=m.n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
-        files=files,
-        applied_batches=m.applied_batches,
-        checkpoint=m.checkpoint,
-        summary={"operation": "vacuum_tombstones", "watermark": str(watermark_major)},
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
-        bloom_ptrs=bloom_updates,
-        bucket_bytes={
-            b: _bytes_of(es) for b, es in vac_files.items()
-        },
-    )
-    table.commit(nm, staging)
-    return new_version
 
 
 def delete_where(
     spark: SparkSession,
     table: LakeTable,
     predicate: Any,
-    salt_buckets: int | None = None,
 ) -> tuple[int, int]:
     """Row-level DELETE WHERE as a copy-on-write commit (Iceberg
     ``DeleteFromTable`` / Delta ``DELETE FROM`` — the retention/GDPR path,
@@ -1312,14 +1300,12 @@ def delete_where(
     guard needs it). A newer real event (greater order key) resurrects the
     key as usual.
 
-    Scale shape: pass 1 finds the buckets holding matching live rows (a
-    pruned, narrow read — Catalyst pushes simple predicates to the parquet
-    scan); pass 2 folds and rewrites ONLY those buckets, exactly like
-    ``compact_buckets``; untouched buckets' pointers carry forward. Blooms
-    rebuild per touched bucket only (tombstones keep their keys, so the
-    completeness invariant holds). CDF ``changes()`` sees the rewrite as
-    ordinary data (summary operation ``delete_where``, never attributed as
-    compaction-only) and emits delete kinds for the scrubbed keys.
+    Pass 1 finds the buckets holding matching live rows (a pruned, narrow
+    read); pass 2 rewrites ONLY those through :func:`_rewrite_buckets`.
+    The scrub runs on the raw rows, before the reduce: it keeps every row's
+    order key, so it commutes with the reduce. CDF ``changes()`` sees the
+    rewrite as ordinary data (summary operation ``delete_where``) and emits
+    delete kinds for the scrubbed keys.
 
     Returns ``(version, rows_deleted)`` — the current version with 0 when
     nothing matched (no empty commits).
@@ -1328,7 +1314,6 @@ def delete_where(
         predicate = F.expr(predicate)
     m = table.manifest()
     data_cols = [f.name for f in m.current_schema().fields]
-    full_cols = data_cols + ["_lsn", "_deleted"]
 
     # pass 1: which buckets hold matching live rows, and how many rows
     hits = (
@@ -1344,15 +1329,6 @@ def delete_where(
     buckets = sorted(int(r["_b"]) for r in hits)
     n_deleted = int(sum(r["count"] for r in hits))
 
-    raw = table.read(spark, buckets=buckets, include_internal=True).withColumn(
-        "_b", bucket_expr(m.key_col, m.n_buckets)
-    )
-    reduced = lww_dedup(
-        raw.select(*full_cols, "_b"),
-        key_cols=m.key_col,
-        order_cols=[m.lww_major, "_lsn"],
-        salt_buckets=salt_buckets,
-    )
     # three-valued logic guard: a predicate that evaluates to NULL (e.g.
     # `lang = 'x'` on a NULL lang) must mean "not matched", never a NULL
     # _deleted flag (which the read-side `~_deleted` filter would drop)
@@ -1363,60 +1339,21 @@ def delete_where(
         else F.col(c)
         for c in data_cols
     ]
-    converted = reduced.select(
+    scrubbed = _bucket_rows(spark, table, m, buckets).select(
         *scrub,
         F.col("_lsn"),
         (F.col("_deleted") | hit).alias("_deleted"),
         F.col("_b"),
     )
-
-    new_version = m.version + 1
-    staging = table.snapshot_staging_dir(new_version)
-    _ensure_stats_friendly_writes(spark)
-    (
-        converted.repartition(max(len(buckets), 1), F.col("_b"))
-        .sortWithinPartitions(F.col(m.key_col))
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(staging)
-    )
-    new_files = _enumerate_bucket_files(
-        staging, m.schema_version, new_version, reduced=True,
-        stats_col=m.key_col, major_col=m.lww_major,
-    )
-    files = m.files.with_updates(
-        {str(b): new_files.get(str(b), []) for b in buckets}
-    )
-    bloom_updates = _bloom_ptr_updates(
-        spark, table, m, new_files, new_version, mode="rebuild"
-    )
-    bucket_bytes = dict(m.bucket_bytes)
-    for b in buckets:
-        bucket_bytes[str(b)] = _bytes_of(new_files.get(str(b), []))
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=m.n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
-        files=files,
-        applied_batches=m.applied_batches,
-        checkpoint=m.checkpoint,
-        summary={
+    version = _rewrite_buckets(
+        spark, table, m, scrubbed, buckets,
+        {
             "operation": "delete_where",
-            "buckets": [int(b) for b in buckets],
+            "buckets": buckets,
             "rows_deleted": n_deleted,
         },
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
-        bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
-        bucket_bytes=bucket_bytes,
     )
-    table.commit(nm, staging)
-    return new_version, n_deleted
+    return version, n_deleted
 
 
 def rehash_buckets(
@@ -1430,119 +1367,28 @@ def rehash_buckets(
     (buckets sized for 1 TB are 100-key-range monsters at 100 TB: point
     lookups scan too much, commits contend on too few partition dirs).
 
-    One full-table rewrite (run as rarely as Iceberg's
-    rewrite-data-files-with-new-spec): LWW-fold all generations, keep
-    tombstones (they still guard against late arrivals), key-sort within
-    the new buckets so parquet min/max stay tight, commit with the new
-    ``n_buckets`` atomically — readers and writers before the commit see
-    the old layout, after it the new one; a concurrent merge loses the CAS
-    and rebases onto the new bucket count automatically (its bucket ids are
-    recomputed from the manifest it rebases on).
-
-    The CDF across a rehash stays correct (every bucket's pointer changes →
-    the diff reads both sides in full and keys, not buckets, drive the
-    comparison) — just not pruned, like any full rewrite."""
+    One full-table rewrite through :func:`_rewrite_buckets`, with ``_b``
+    under the new count (run as rarely as Iceberg's
+    rewrite-data-files-with-new-spec). Tombstones stay (they still guard
+    against late arrivals) and every bloom is rebuilt under the new layout.
+    Readers and writers before the commit see the old layout, after it the
+    new one; a concurrent merge loses the CAS and rebases onto the new
+    bucket count (its bucket ids come from the manifest it rebases on). The
+    CDF across a rehash stays correct, just not pruned, like any full
+    rewrite: every bucket's pointer changes, and keys drive the diff."""
     if new_n_buckets < 1:
         raise ValueError("new_n_buckets must be >= 1")
     m = table.manifest()
-    data_cols = [f.name for f in m.current_schema().fields]
-    raw = table.read(spark, include_internal=True)
-    full = lww_dedup(
-        raw, key_cols=m.key_col, order_cols=[m.lww_major, "_lsn"]
-    ).withColumn("_b", bucket_expr(m.key_col, new_n_buckets))
-    new_version = m.version + 1
-    staging = table.snapshot_staging_dir(new_version)
-    _ensure_stats_friendly_writes(spark)
-    (
-        full.select(*data_cols, "_lsn", "_deleted", "_b")
-        .repartition(new_n_buckets, F.col("_b"))
-        .sortWithinPartitions(m.key_col)
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(staging)
-    )
-    from embulk_input_marketo_spark.lake.table import FileSet
-
-    rh_files = _enumerate_bucket_files(
-        staging, m.schema_version, new_version, reduced=True,
-        stats_col=m.key_col, major_col=m.lww_major,
-    )
-    files = FileSet.replace_all(table.meta_dir, rh_files)
-    # bucket mapping changed: rebuild every bloom under the NEW layout in
-    # the same commit (stale per-bucket blooms would answer for the wrong
-    # key sets — replacement, never carry-forward, is the only sound option)
-    bloom_updates = _bloom_ptr_updates(
-        spark, table, m, rh_files, new_version, mode="rebuild",
-        n_buckets=new_n_buckets,
-    )
-    nm = Manifest(
-        version=new_version,
-        parent=m.version,
-        key_col=m.key_col,
-        lww_major=m.lww_major,
-        n_buckets=new_n_buckets,
-        schema_version=m.schema_version,
-        schemas=m.schemas,
-        renames=m.renames,
-        files=files,
-        applied_batches=m.applied_batches,
-        checkpoint=m.checkpoint,
-        summary={
+    return _rewrite_buckets(
+        spark, table, m, _bucket_rows(spark, table, m, n_buckets=new_n_buckets),
+        list(range(new_n_buckets)),
+        {
             "operation": "rehash",
             "from_n_buckets": m.n_buckets,
             "to_n_buckets": new_n_buckets,
         },
-        committed_at=time.time(),
-        bloom_conf=dict(m.bloom_conf),
-        bloom_ptrs=bloom_updates,
-        bucket_bytes={
-            b: _bytes_of(es) for b, es in rh_files.items()
-        },
+        full=True, n_buckets=new_n_buckets,
     )
-    table.commit(nm, staging)
-    return new_version
-
-
-def _column_min_max(md, col: str):
-    """(min, max) of ``col`` over every row group of a parquet footer
-    (``pyarrow`` FileMetaData), or None when any row group lacks stats."""
-    mins: list = []
-    maxs: list = []
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        st = None
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            if c.path_in_schema == col:
-                st = c.statistics
-                break
-        if st is None or not st.has_min_max:
-            return None
-        mins.append(st.min)
-        maxs.append(st.max)
-    if not mins:
-        return None
-    return min(mins), max(maxs)
-
-
-def _file_key_stats(md, col: str):
-    """Per-FILE (min, max) of the merge key, read from the parquet footer
-    the commit just wrote — Iceberg's write-time column stats. Parquet
-    writers may TRUNCATE string stats, but the spec keeps them conservative
-    (min is a prefix ≤ the true min; max has its last byte incremented ≥
-    the true max), so a range check against them can only over-include,
-    never skip a file that holds the key. Returns None (no stats recorded)
-    on any doubt — missing stats merely cost the skip."""
-    try:
-        got = _column_min_max(md, col)
-        if got is None:
-            return None
-        lo, hi = got
-        if isinstance(lo, bytes) or not isinstance(lo, (str, int, float)):
-            return None  # keep the manifest JSON-portable
-        return lo, hi
-    except Exception:
-        return None
 
 
 def major_to_micros(v) -> int | None:
@@ -1563,21 +1409,42 @@ def major_to_micros(v) -> int | None:
     return int(v)
 
 
-def _file_major_stats(md, col: str):
-    """Per-file (min, max) of the lww-major column as epoch micros — the
-    time axis of a CDC web table ("pages crawled in window X"). Same
-    conservative-footer discipline as :func:`_file_key_stats`; None on any
-    doubt."""
+def _file_stats(md, col: str, convert=None):
+    """Per-FILE (min, max) of ``col`` over every row group of the parquet
+    footer the commit just wrote (``pyarrow`` FileMetaData) — Iceberg's
+    write-time column stats: the merge key's, and the lww-major's mapped
+    to epoch micros by ``convert=major_to_micros`` (the time axis of a CDC
+    web table, "pages crawled in window X"). Parquet writers may TRUNCATE
+    string stats, but the spec keeps them conservative (min is a prefix ≤
+    the true min; max has its last byte incremented ≥ the true max), so a
+    range check against them can only over-include, never skip a file that
+    holds the value. Returns None (no stats recorded) on any doubt — a row
+    group without stats, or a bound that is not JSON-portable; missing
+    stats merely cost the skip."""
     try:
-        got = _column_min_max(md, col)
-        if got is None:
+        mins: list = []
+        maxs: list = []
+        for rg in range(md.num_row_groups):
+            rgm = md.row_group(rg)
+            st = next((
+                rgm.column(ci).statistics for ci in range(rgm.num_columns)
+                if rgm.column(ci).path_in_schema == col
+            ), None)
+            if st is None or not st.has_min_max:
+                return None
+            mins.append(st.min)
+            maxs.append(st.max)
+        if not mins:
             return None
-        lo, hi = major_to_micros(got[0]), major_to_micros(got[1])
-        if lo is None or hi is None:
-            return None
-        return lo, hi
+        lo, hi = min(mins), max(maxs)
+        if convert is not None:
+            lo, hi = convert(lo), convert(hi)
     except Exception:
         return None
+    if any(isinstance(v, bytes) or not isinstance(v, (str, int, float))
+           for v in (lo, hi)):
+        return None  # keep the manifest JSON-portable
+    return lo, hi
 
 
 def _enumerate_bucket_files(
@@ -1617,14 +1484,13 @@ def _enumerate_bucket_files(
         except Exception:
             return e  # no footer: no stats, no row count — both optional
         e["rows"] = md.num_rows
-        if stats_col is not None:
-            stats = _file_key_stats(md, stats_col)
+        for col, names, convert in (
+            (stats_col, ("kmin", "kmax"), None),
+            (major_col, ("tmin", "tmax"), major_to_micros),
+        ):
+            stats = None if col is None else _file_stats(md, col, convert)
             if stats is not None:
-                e["kmin"], e["kmax"] = stats
-        if major_col is not None:
-            tstats = _file_major_stats(md, major_col)
-            if tstats is not None:
-                e["tmin"], e["tmax"] = tstats
+                e.update(zip(names, stats))
         return e
 
     per_bucket: dict[str, list[str]] = {}

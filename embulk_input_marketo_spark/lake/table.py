@@ -38,7 +38,7 @@ import os
 import time
 import uuid
 from collections.abc import Iterator, Mapping
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -217,6 +217,19 @@ class Manifest:
 
     def current_schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schemas[str(self.schema_version)])
+
+    def evolve(self, **changes: Any) -> "Manifest":
+        """The next snapshot's manifest: this one with ``changes`` applied,
+        one version on, parented here and stamped now (``version``,
+        ``parent`` and ``committed_at`` always follow from this manifest).
+        Untouched fields are shared, not copied: no engine code mutates a
+        built manifest's fields in place."""
+        return replace(self, **{
+            **changes,
+            "version": self.version + 1,
+            "parent": self.version,
+            "committed_at": time.time(),
+        })
 
 
 class PublishConflictError(RuntimeError):
@@ -521,27 +534,15 @@ class LakeTable:
                     self.meta_dir,
                     pending={b: list(es) for b, es in tf.items()},
                 )
-            m = Manifest(
-                version=base.version + 1,
-                parent=base.version,
-                key_col=target.key_col,
-                lww_major=target.lww_major,
-                n_buckets=target.n_buckets,
-                schema_version=target.schema_version,
-                schemas=dict(target.schemas),
-                renames=[dict(r) for r in target.renames],
-                files=files,
-                applied_batches=list(target.applied_batches),
-                checkpoint=dict(target.checkpoint),
-                summary={
+            # the target's whole state, re-committed on top of the frontier
+            m = base.evolve(**{
+                **vars(target),
+                "files": files,
+                "summary": {
                     "operation": "restore",
                     "restored_from": target.version,
                 },
-                committed_at=time.time(),
-                bloom_conf=dict(target.bloom_conf),
-                bloom_ptrs=dict(target.bloom_ptrs),
-                bucket_bytes=dict(target.bucket_bytes),
-            )
+            })
             self.commit(m)
             return m
 
@@ -582,28 +583,15 @@ class LakeTable:
                 ptrs[b] = B.write_bloom_side(
                     self.meta_dir, m.version + 1, b, bits, m_bits, k, n
                 )
-            nm = Manifest(
-                version=m.version + 1,
-                parent=m.version,
-                key_col=m.key_col,
-                lww_major=m.lww_major,
-                n_buckets=m.n_buckets,
-                schema_version=m.schema_version,
-                schemas=m.schemas,
-                renames=m.renames,
-                files=m.files,
-                applied_batches=m.applied_batches,
-                checkpoint=m.checkpoint,
+            nm = m.evolve(
                 summary={
                     "operation": "enable_key_blooms",
                     "m_bits": m_bits,
                     "k": k,
                     "buckets": len(ptrs),
                 },
-                committed_at=time.time(),
                 bloom_conf={"m_bits": m_bits, "k": k},
                 bloom_ptrs=ptrs,
-                bucket_bytes=dict(m.bucket_bytes),
             )
             self.commit(nm)
             return nm
@@ -1107,7 +1095,7 @@ class LakeTable:
         File entries whose manifest-recorded (kmin, kmax) range excludes it
         are SKIPPED before any scan is planned (Iceberg manifest file stats;
         the stats are written conservatively, so skipping is sound — see
-        merge._file_key_stats; entries without stats are always read), and
+        merge._file_stats; entries without stats are always read), and
         the key predicate filters the rows of the files that are read.
 
         ``major_range_us``: closed epoch-micros range on the lww-major
@@ -1562,23 +1550,12 @@ class LakeTable:
             else:
                 raise ValueError(f"unknown change {ch}")
         new_schema = T.StructType(fields)
-        nm = Manifest(
-            version=m.version + 1,
-            parent=m.version,
-            key_col=m.key_col,
-            lww_major=m.lww_major,
-            n_buckets=m.n_buckets,
+        nm = m.evolve(
             schema_version=new_sv,
             schemas={**m.schemas, str(new_sv): new_schema.jsonValue()},
             renames=renames,
-            files=m.files,
-            applied_batches=m.applied_batches,
             checkpoint={**m.checkpoint, **(checkpoint_update or {})},
             summary=summary or {"operation": "evolve_schema", "changes": changes},
-            committed_at=time.time(),
-            bloom_conf=dict(m.bloom_conf),
-            bloom_ptrs=dict(m.bloom_ptrs),
-            bucket_bytes=dict(m.bucket_bytes),
         )
         self._write_manifest(nm)
         return nm

@@ -99,7 +99,7 @@ def q_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 slices: still a multi-slice replay (slice boundaries, idempotent
     # commits, cross-batch LWW all exercised — the result is slice-count
     # invariant), at half the per-batch fixed job cost of the old 4
-    replay(spark, log, table, n_slices=2, salt_buckets=8)
+    replay(spark, log, table, n_slices=2)
     return table.read(spark).select(
         F.col("url").alias("user_id"),
         F.col("warc_ts").alias("ts"),
@@ -3423,7 +3423,7 @@ def q_key_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
         n_buckets=8, bloom_bits=1 << 17,
     )
-    replay(spark, log, table, n_slices=2, salt_buckets=8)
+    replay(spark, log, table, n_slices=2)
     ev = _t(spark, sf_dir, "events")
     probes = (
         ev.where(F.col("user_id") % 3 == 0)
@@ -3585,7 +3585,7 @@ def q_cdc_mirror_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             holder["dst"] = create_mirror(src, f"{path}/dst", n_buckets=4)
         sync_mirror(spark, src, holder["dst"])
 
-    replay(spark, log, src, n_slices=2, salt_buckets=8, on_batch=on_batch)
+    replay(spark, log, src, n_slices=2, on_batch=on_batch)
     sync_mirror(spark, src, holder["dst"])  # idempotent catch-up no-op
     return holder["dst"].read(spark).select(
         F.col("url").alias("user_id"),
@@ -3630,7 +3630,7 @@ def q_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
         n_buckets=8,
     )
-    replay(spark, log, table, n_slices=2, salt_buckets=8)
+    replay(spark, log, table, n_slices=2)
     delete_where(spark, table, F.col("value") > 60.0)
     return table.read(spark).select(
         F.col("url").alias("user_id"),

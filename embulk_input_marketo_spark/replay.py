@@ -54,7 +54,6 @@ def replay(
     table: LakeTable,
     batch_span: int = 1_000_000,
     n_slices: int | None = None,
-    salt_buckets: int | None = None,
     mode: str = "mor",
     compact_threshold: int = 8,
     extract_text_from_html: bool = False,
@@ -88,8 +87,6 @@ def replay(
     - ``registry``: before each slice, wait for the in-flight commit, apply
       the registry changes effective by the slice's upper lsn, and project
       the slice against the re-read schema.
-    - ``salt_buckets`` acts on mor only (its compactions); the cow fold
-      reduces in its one bucket exchange, unsalted.
     - ``bloom_fast_path`` (cow mode with key blooms enabled): probe each
       slice's keys against the per-bucket blooms before the fold — buckets
       whose keys are all provably absent append instead of read+rewrite
@@ -123,7 +120,6 @@ def replay(
             window=(lo, hi),
             lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
             compact_threshold=compact_threshold,
-            salt_buckets=salt_buckets,
         )
 
     unconsumed: dict[int, Any] = {}  # slice index → staged, commit pending

@@ -48,7 +48,6 @@ def stream_replay(
     changelog_dir: str,
     table: LakeTable,
     checkpoint_dir: str,
-    salt_buckets: int | None = 16,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -90,7 +89,6 @@ def stream_replay(
             proj,
             batch_id=f"stream-{stream_id}-epoch-{epoch_id}",
             channel=(f"stream-{stream_id}", int(epoch_id)),
-            salt_buckets=salt_buckets,
             lineage={
                 "epoch": epoch_id,
                 "stream": stream_id,
@@ -114,7 +112,6 @@ def stream_wal_replay(
     table: LakeTable,
     checkpoint_dir: str,
     row_schema,
-    salt_buckets: int | None = 16,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -164,7 +161,6 @@ def stream_wal_replay(
             proj,
             batch_id=f"wal-{stream_id}-epoch-{epoch_id}",
             channel=(f"wal-{stream_id}", int(epoch_id)),
-            salt_buckets=salt_buckets,
             lineage={
                 "epoch": epoch_id,
                 "stream": stream_id,

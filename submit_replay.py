@@ -8,7 +8,7 @@ deployment surface):
         --changelog s3://bucket/changelog/ --table s3://bucket/web_pages \
         [--create --key-col url --lww-major warc_ts --n-buckets 4096] \
         [--slices 8 | --batch-span 1000000] [--mode mor|cow] \
-        [--salt-buckets 16] [--extract-text]
+        [--extract-text]
 
 Uses ``SparkSession.builder.getOrCreate()`` with NO master/size config of
 its own — parallelism, executors and memory come from spark-submit, so the
@@ -46,7 +46,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="max lsn span per slice (ignored when --slices set)")
     p.add_argument("--mode", choices=["mor", "cow"], default="mor")
     p.add_argument("--compact-threshold", type=int, default=8)
-    p.add_argument("--salt-buckets", type=int, default=None)
     p.add_argument("--extract-text", action="store_true",
                    help="derive text from html via the Arrow pandas UDF")
     p.add_argument("--bloom-fast-path", action="store_true",
@@ -92,7 +91,6 @@ def main(argv: list[str] | None = None) -> dict:
         spark, log, table,
         batch_span=a.batch_span,
         n_slices=a.slices,
-        salt_buckets=a.salt_buckets,
         mode=a.mode,
         compact_threshold=a.compact_threshold,
         extract_text_from_html=a.extract_text,

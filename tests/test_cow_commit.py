@@ -420,8 +420,7 @@ def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
     - Its merge runs 4 of them.
     - The snapshot's plan has no exchange; the pre-pass scans no payload
       column; the write plan has one exchange above the union; the driver
-      loads and rebuilds no bloom.
-    - ``salt_buckets`` adds no job or exchange: cow ignores it."""
+      loads and rebuilds no bloom."""
     path = str(tmp_path / "log")
     generator.changelog(spark, 3_000, 150, seed=21).write.parquet(path)
     log = spark.read.parquet(path)
@@ -460,7 +459,7 @@ def test_cow_commit_jobs_plan_and_driver_blooms(spark, tmp_path, monkeypatch):
     try:
         report = replay_mod.replay(
             spark, log.where(F.col("lsn") < 2_300), t, mode="cow",
-            bloom_fast_path=True, salt_buckets=8,
+            bloom_fast_path=True,
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -53,7 +53,7 @@ def test_full_replay_matches_oracle(spark, changelog, tmp_path, mode,
                                     compact_threshold):
     table = LakeTable.create(str(tmp_path / "web_pages"), _schema(changelog),
                              key_col="url", n_buckets=16)
-    report = replay(spark, changelog, table, batch_span=6_000, salt_buckets=8,
+    report = replay(spark, changelog, table, batch_span=6_000,
                     mode=mode, compact_threshold=compact_threshold)
     assert len(report.batches) == 4  # ceil((N-1 - (-1)) / 6000) slices of (hwm, max]
     assert all(b.applied for b in report.batches)

@@ -25,7 +25,7 @@ def test_stream_replay_matches_oracle(spark, tmp_path):
 
     q = stream_replay(
         spark, log_dir, table, checkpoint_dir=str(tmp_path / "ckpt"),
-        salt_buckets=4, available_now=True, max_files_per_trigger=4,
+        available_now=True, max_files_per_trigger=4,
     )
     q.awaitTermination(300)
 
