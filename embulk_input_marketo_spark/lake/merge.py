@@ -1150,7 +1150,10 @@ def _write_reduced(
     - ``keep``: an optional predicate on the winners — vacuum's tombstone
       reclaim, which does not commute with the reduce.
     - ``sort_cols`` order the rows within each file: the key, for tight
-      parquet min/max on point lookups, or a z-order key then the key."""
+      parquet min/max on point lookups, or a z-order key then the key. The
+      sort leads with ``_b``: the partitioned writer requires ``_b``
+      ordering, and a sort on ``sort_cols`` alone is dropped beneath the
+      ``Sort [_b]`` it adds."""
     order = sorted({int(b) for b in buckets}) or [0]
     salts = _granule_salts(spark, len(order))
     # the bucket → salt table ships as one SQL literal (one py4j call)
@@ -1168,7 +1171,7 @@ def _write_reduced(
     staging = table.snapshot_staging_dir(new_version)
     _ensure_stats_friendly_writes(spark)
     (
-        won.sortWithinPartitions(*sort_cols)
+        won.sortWithinPartitions("_b", *sort_cols)
         .write.mode("overwrite")
         .partitionBy("_b")
         .parquet(staging)

@@ -21,6 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from embulk_input_marketo_spark.functions import similarity, textops
 from embulk_input_marketo_spark.operators import dedup_docs, sanitize, shards
@@ -49,6 +50,59 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # CDC core (events ≡ changelog)
 # ---------------------------------------------------------------------------
 
+# the lake fixtures' fields: the events changelog below, keyed by url
+_EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+# the Debezium row image: the same fields, the time carried by source.ts_ms
+_ROW_SCHEMA = T.StructType(
+    [f for f in _EVENTS_SCHEMA.fields if f.name != "warc_ts"]
+)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh throwaway directory, on tmpfs when available: the query's
+    cost should be the replay plan, not the sandbox's intermittently-
+    throttled virtio disk; the caller still holds a lazy DataFrame over it,
+    so reclaim at exit."""
+    path = tempfile.mkdtemp(
+        prefix=prefix,
+        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
+    )
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def _lake(prefix: str, bloom_bits: int = 0):
+    """A fresh, empty 8-bucket lake table ``<scratch>/web_pages`` over
+    :data:`_EVENTS_SCHEMA`, keyed by url with warc_ts as the LWW major and
+    key blooms of ``bloom_bits`` (0: none). Any side state the query keeps
+    goes next to the table, under ``os.path.dirname(table.path)``. Never
+    cached: every call builds a new lake."""
+    from embulk_input_marketo_spark.lake import LakeTable
+
+    return LakeTable.create(
+        f"{_scratch_dir(prefix)}/web_pages", _EVENTS_SCHEMA, key_col="url",
+        lww_major="warc_ts", n_buckets=8, bloom_bits=bloom_bits,
+    )
+
+
+def _as_events(df: DataFrame, *extra) -> DataFrame:
+    """A lake read-back under the events table's column names."""
+    return df.select(
+        F.col("url").alias("user_id"),
+        F.col("warc_ts").alias("ts"),
+        "value",
+        "props",
+        *extra,
+    )
+
+
 def _events_as_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic changelog view of events: signup→I, error→D, rest→U."""
     ev = _t(spark, sf_dir, "events")
@@ -68,44 +122,17 @@ def _events_as_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP: full engine replay — changelog → sliced batches → salted LWW
     dedup → manifest-gated MERGE into a lake table → read final state."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    # throwaway lake on tmpfs when available: the query's cost should be the
-    # replay plan, not the sandbox's intermittently-throttled virtio disk;
-    # the caller still holds a lazy DataFrame over it, so reclaim at exit
-    path = tempfile.mkdtemp(
-        prefix="lake_q_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_q_")
     # batch span derived from the lsn bounds replay computes anyway (no extra
     # full scan — a count() here used to add one more job over the changelog).
     # 2 slices: still a multi-slice replay (slice boundaries, idempotent
     # commits, cross-batch LWW all exercised — the result is slice-count
     # invariant), at half the per-batch fixed job cost of the old 4
     replay(spark, log, table, n_slices=2)
-    return table.read(spark).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-    )
+    return _as_events(table.read(spark))
 
 
 def _sql_cdc_final_state() -> str:
@@ -132,38 +159,15 @@ def q_cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     then diff the snapshots — insert/update/delete per key, candidate
     buckets from a pure metadata pointer diff. Oracle: the same diff
     computed independently as two LWW prefix states over the raw events."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_cdf_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_cdf_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
-    return table.changes(spark, v1).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-        F.col("_change").alias("change"),
+    return _as_events(
+        table.changes(spark, v1), F.col("_change").alias("change")
     )
 
 
@@ -220,37 +224,15 @@ def q_cdc_changes_preimage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc_changes_feed, but updates emit (update_preimage, update_postimage)
     row pairs so incremental consumers can retract the old contribution.
     Oracle: the two-prefix LWW diff emitting both sides of each update."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_cdfpre_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_cdfpre_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
-    return table.changes(spark, v1, include_preimage=True).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
+    return _as_events(
+        table.changes(spark, v1, include_preimage=True),
         F.col("_change").alias("change"),
     )
 
@@ -316,39 +298,15 @@ def q_time_travel_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled-back suffix must leave no trace. The checkpoint rolls back with
     the data, so a resumed replay re-ingests exactly the suffix (pytest
     asserts the convergence half)."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_restore_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_restore_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
     table.restore(v1)
-    return table.read(spark).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-    )
+    return _as_events(table.read(spark))
 
 
 def _sql_time_travel_restore() -> str:
@@ -378,27 +336,18 @@ def q_wal_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle, which projects the same changelog directly from the
     raw events (never touching JSON). ts lands at Debezium's millisecond
     precision on both sides."""
-    from pyspark.sql import types as T
-
     from embulk_input_marketo_spark.sources.debezium import (
         parse_debezium,
         to_debezium,
     )
 
     log = _events_as_changelog(spark, sf_dir)
-    row_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     wire = to_debezium(
         log.select("op", "url", "value", "props", "lsn", "warc_ts"),
         row_cols=["url", "value", "props"],
         lsn_col="lsn",
     )
-    good, _quarantine = parse_debezium(wire, row_schema)
+    good, _quarantine = parse_debezium(wire, _ROW_SCHEMA)
     return good.select(
         F.col("url").alias("user_id"),
         F.col("warc_ts").cast("timestamp_ntz").alias("ts"),
@@ -429,8 +378,6 @@ def q_wal_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     map<string,string> and votes a conservative type per unknown field.
     Oracle: the drift summary computed directly from the raw events (name,
     voted type, first lsn carrying the field, occurrence count)."""
-    from pyspark.sql import types as T
-
     from embulk_input_marketo_spark.sources.debezium import (
         discover_schema_drift,
         to_debezium,
@@ -455,14 +402,7 @@ def q_wal_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_cols=["url", "value", "props", "lang", "hit_count"],
         lsn_col="lsn",
     )
-    known = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    return discover_schema_drift(wire, known).select(
+    return discover_schema_drift(wire, _ROW_SCHEMA).select(
         "field_name", "field_type", "first_lsn", "n_seen"
     )
 
@@ -1114,12 +1054,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant the minhash/simhash oracles pin). Oracle: text-equality
     EXISTS checks against the corpus and against earlier batch ids."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    path = tempfile.mkdtemp(
-        prefix="mh_index_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    index_path = f"{path}/minhash_index"
+    index_path = f"{_scratch_dir('mh_index_')}/minhash_index"
     dedup_docs.write_minhash_index(docs, index_path)
 
     d = F.col("doc_id")
@@ -1292,12 +1227,17 @@ def _sql_ngram_jaccard_matrix() -> str:
     """
 
 
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (exact ANN baseline) for 3 query vectors."""
-    emb = _t(spark, sf_dir, "embeddings").select(
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table with its vectors as double arrays."""
+    return _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
+
+
+def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k (exact ANN baseline) for 3 query vectors."""
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1330,10 +1270,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the true top-5 for every query on the fixture, so the approximate path
     must reproduce the exact answer — recall 1.0 is the checked contract
     (round 1 had no oracle and starving buckets returned 7/15 rows)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1347,19 +1284,11 @@ def q_ann_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_topk_indexed): same parameters as ann_topk, so the same exact
     brute-force oracle applies — and the scan is partition-pruned to the
     probe set instead of re-exploding the table per query."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    path = tempfile.mkdtemp(
-        prefix="ann_idx_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    idx = f"{path}/index"
+    idx = f"{_scratch_dir('ann_idx_')}/index"
     similarity.write_ann_index(
         emb, idx, dim=64, n_planes=6, n_tables=8
     )
@@ -1415,18 +1344,24 @@ def _sql_embedding_near_dup() -> str:
     """
 
 
-def _emb_with_planted_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings ∪ 5 planted near-neighbors per query vector (vec_id<3):
-    copy j perturbs every component by +0.02·j, so the true top-k of each
-    query is itself plus its planted cluster — geometry IVF/ANN can exploit
-    (uniform random vectors have near-orthogonal 'neighbors' spread across
-    every cell, which no honest pruning can cover)."""
-    base = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+def _emb_with_planted(
+    spark: SparkSession, sf_dir: str, seeds: int = 10
+) -> DataFrame:
+    """embeddings ∪ 5 planted near-neighbors of each vector with
+    vec_id < ``seeds``: copy j perturbs every component by +0.02·j, so the
+    true top-k of each seed is itself plus its planted cluster — geometry
+    IVF/ANN can exploit (uniform random vectors have near-orthogonal
+    'neighbors' spread across every cell, which no honest pruning can
+    cover; organic vectors are all semantic singletons, base pairwise max
+    cosine ~0.51).
+
+    - ``seeds=3``: the IVF fixture, one cluster per query vector;
+    - ``seeds=10``: the semantic-dedup fixture, shared by
+      ``q_semantic_dedup``, ``q_semantic_cell_stats`` and the bench's
+      skew-guard record so all three describe the same corpus."""
+    base = _embeddings(spark, sf_dir)
     planted = (
-        base.where(F.col("vec_id") < 3)
+        base.where(F.col("vec_id") < seeds)
         .crossJoin(spark.range(1, 6).select(F.col("id").alias("j")))
         .select(
             (F.lit(100000) + F.col("vec_id") * 10 + F.col("j")).alias("vec_id"),
@@ -1443,7 +1378,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     true top-5 (itself + its nearest planted copies) lives in the query's own
     centroid cell, so probing 2 of 8 cells — REAL pruning — must reproduce
     the exact brute-force top-5 (the SQL oracle)."""
-    emb = _emb_with_planted_clusters(spark, sf_dir)
+    emb = _emb_with_planted(spark, sf_dir, seeds=3)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1485,10 +1420,7 @@ def q_kmeans_refine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked end to end: the oracle replays BOTH iterations (assignment
     argmax, per-position means, empty-cell carry-over) in SQL, so a drift
     in any step of the k-means trajectory flips the hash."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    emb = _embeddings(spark, sf_dir)
     cents = similarity.kmeans_refine(
         emb, similarity.md5_centroids(emb, n_cells=8), n_iters=2
     )
@@ -2987,9 +2919,6 @@ def q_cdf_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone — the base table is never re-read. The oracle recomputes the
     final rollup from scratch over the raw events, so any pre-image error
     (missing, duplicated, mis-signed) lands as a value mismatch."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.incremental import (
         incremental_agg_delta,
         merge_agg_delta,
@@ -2997,23 +2926,7 @@ def q_cdf_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_iagg_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_iagg_")
     grp = (F.col("url").cast("long") % 16).alias("grp")
     # integer-exact measure (the token_frequency_stats discipline): floor of
     # a fixed-point scaling, so sums are associative and engine-independent
@@ -3072,30 +2985,11 @@ def q_time_window_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose FINAL crawl falls outside the window is absent — never served at
     an older in-range version (the MoR-soundness rule in table._read_raw).
     Oracle: the final LWW state filtered by the same closed ts range."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.merge import compact_buckets
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_twin_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_twin_")
     replay(spark, log, table, n_slices=2)
     compact_buckets(spark, table, list(range(8)))
     import datetime as _dt
@@ -3105,12 +2999,7 @@ def q_time_window_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latest): non-vacuous at sf0.01 (32 of 120) and sf0.1 (377)
     lo = _dt.datetime(2024, 1, 29)
     hi = _dt.datetime(2024, 1, 30, 12)
-    return table.read(spark, major_range=(lo, hi)).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-    )
+    return _as_events(table.read(spark, major_range=(lo, hi)))
 
 
 def _sql_time_window_scan() -> str:
@@ -3143,33 +3032,14 @@ def q_cdf_follower_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read afterwards. Oracle: full recompute of the final rollup from the
     raw events — a lost, doubled, or mis-signed slice anywhere across the
     three maintains lands as a value mismatch."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.follow import ChangeFeedFollower
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_follow_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_follow_")
     follower = ChangeFeedFollower(
         table,
-        f"{path}/follower_state",
+        f"{os.path.dirname(table.path)}/follower_state",
         group_exprs=[(F.col("url").cast("long") % 16).alias("grp")],
         group_names=["grp"],
         measure=F.coalesce(
@@ -3257,29 +3127,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the biggest cell's whole pair loop in one task). max_cell_size is the
     # engine default (1000) and the oracle mirrors it in its cells CTE.
     return similarity.semantic_dedup(emb, n_cells=32, threshold=0.95)
-
-
-def _emb_with_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The semantic-dedup fixture: embeddings ∪ 5 progressively-perturbed
-    copies of each vec_id < 10 vector (organic vectors are all singletons —
-    base pairwise max cosine ~0.51). Shared by ``q_semantic_dedup``,
-    ``q_semantic_cell_stats`` and the bench's skew-guard record so all three
-    describe the same corpus."""
-    base = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    planted = (
-        base.where(F.col("vec_id") < 10)
-        .crossJoin(spark.range(1, 6).select(F.col("id").alias("j")))
-        .select(
-            (F.lit(100000) + F.col("vec_id") * 10 + F.col("j")).alias("vec_id"),
-            F.transform(
-                "embedding", lambda x: x + F.lit(0.02) * F.col("j")
-            ).alias("embedding"),
-        )
-    )
-    return base.unionByName(planted)
 
 
 def q_semantic_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3400,29 +3247,10 @@ def q_key_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probe set (deterministic, from events): every user_id ≡ 0 (mod 3) as a
     present-or-deleted probe, and the NEGATED user_ids ≡ 0 (mod 7) as
     guaranteed-absent probes."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_bloom_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8, bloom_bits=1 << 17,
-    )
+    table = _lake("lake_bloom_", bloom_bits=1 << 17)
     replay(spark, log, table, n_slices=2)
     ev = _t(spark, sf_dir, "events")
     probes = (
@@ -3554,45 +3382,23 @@ def q_cdc_mirror_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first, incremental CDF slices after), then read the REPLICA. The
     replica is maintained change-proportionally — exactly-once via its
     channel watermark — and must equal the source's LWW final state."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.mirror import create_mirror, sync_mirror
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_mirror_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    src = LakeTable.create(
-        f"{path}/src", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    src = _lake("lake_mirror_")
     holder: dict = {}
 
     def on_batch(_result) -> None:
         if "dst" not in holder:
-            holder["dst"] = create_mirror(src, f"{path}/dst", n_buckets=4)
+            holder["dst"] = create_mirror(
+                src, f"{os.path.dirname(src.path)}/dst", n_buckets=4
+            )
         sync_mirror(spark, src, holder["dst"])
 
     replay(spark, log, src, n_slices=2, on_batch=on_batch)
     sync_mirror(spark, src, holder["dst"])  # idempotent catch-up no-op
-    return holder["dst"].read(spark).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-    )
+    return _as_events(holder["dst"].read(spark))
 
 
 def _sql_cdc_mirror_replica() -> str:
@@ -3606,38 +3412,14 @@ def q_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     with value > 60.0 — matching rows become order-key-preserving tombstones
     with scrubbed payloads, only their buckets rewrite. The read-back is
     the final state minus the deleted rows."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.merge import delete_where
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_del_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _lake("lake_del_")
     replay(spark, log, table, n_slices=2)
     delete_where(spark, table, F.col("value") > 60.0)
-    return table.read(spark).select(
-        F.col("url").alias("user_id"),
-        F.col("warc_ts").alias("ts"),
-        "value",
-        "props",
-    )
+    return _as_events(table.read(spark))
 
 
 def _sql_retention_delete() -> str:

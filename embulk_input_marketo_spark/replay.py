@@ -203,27 +203,31 @@ def _max_lsn(changelog: DataFrame) -> int:
     return rows[0]["lsn"] if rows else -1
 
 
-def _project_slice(
-    window_df: DataFrame,
-    m: Any,
-    extract_text_from_html: bool,
-    mode: str,
-) -> tuple[DataFrame, dict[str, Any] | None]:
-    """One slice's schema discipline: rename-log translation, projection to
-    the current schema, and the deferred-text derive hook.
+def project_to_schema(df: DataFrame, m: Any) -> DataFrame:
+    """Project an inbound changelog frame onto manifest ``m``'s current
+    schema, plus ``op`` and ``lsn`` as ``_lsn``: the shape every merge
+    takes, from the batch replay and from both streaming replays.
 
     - inbound rows may still carry pre-rename column names (a source that
-      lags the registry); translate through the rename log
+      lags the registry); translate through the rename log, except a name
+      the current schema holds again: after ``drop lang`` and a re-``add``
+      of ``lang``, an inbound ``lang`` is the re-added column, not the
+      drop tombstone
     - project to current schema (+op); unknown inbound columns dropped,
       missing ones padded with typed nulls, types cast — the
       included_fields ∩ describe discipline
       (LeadServiceResponseMapperBuilder.java:47-76)"""
     cur_fields = m.current_schema().fields
+    cur_names = {f_.name for f_ in cur_fields}
     for r in m.renames:
-        if r["old"] in window_df.columns and r["new"] not in window_df.columns:
-            window_df = window_df.withColumnRenamed(r["old"], r["new"])
+        if (
+            r["old"] in df.columns
+            and r["old"] not in cur_names
+            and r["new"] not in df.columns
+        ):
+            df = df.withColumnRenamed(r["old"], r["new"])
     proj = []
-    inbound = dict(zip(window_df.columns, window_df.schema.fields))
+    inbound = dict(zip(df.columns, df.schema.fields))
     for f_ in cur_fields:
         if f_.name in inbound:
             c = F.col(f_.name)
@@ -232,9 +236,20 @@ def _project_slice(
             proj.append(c.alias(f_.name))
         else:
             proj.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-    batch = window_df.select(*proj, F.col("op"), F.col("lsn").alias("_lsn"))
+    return df.select(*proj, F.col("op"), F.col("lsn").alias("_lsn"))
+
+
+def _project_slice(
+    window_df: DataFrame,
+    m: Any,
+    extract_text_from_html: bool,
+    mode: str,
+) -> tuple[DataFrame, dict[str, Any] | None]:
+    """One slice's schema discipline: :func:`project_to_schema`, and the
+    deferred-text derive hook."""
+    batch = project_to_schema(window_df, m)
     derive = None
-    if extract_text_from_html and "text" in [f.name for f in cur_fields]:
+    if extract_text_from_html and "text" in m.current_schema().fieldNames():
         # the engine's own text derivation (input_hint §2.8), Arrow-native
         # over the html payload; byte-identical per url to the oracle's text
         from embulk_input_marketo_spark.functions.textops import (

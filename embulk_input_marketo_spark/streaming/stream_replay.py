@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from embulk_input_marketo_spark.lake.merge import merge_batch
 from embulk_input_marketo_spark.lake.table import LakeTable
+from embulk_input_marketo_spark.replay import project_to_schema
 
 
 def _stream_instance_id(checkpoint_dir: str) -> str:
@@ -68,16 +69,7 @@ def stream_replay(
     stream = reader.parquet(changelog_dir)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        m = table.manifest()
-        data_cols = [f.name for f in m.current_schema().fields]
-        cols = [c for c in data_cols if c in batch_df.columns]
-        missing = [f for f in m.current_schema().fields if f.name not in batch_df.columns]
-        proj = batch_df.select(
-            *[F.col(c) for c in cols],
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing],
-            F.col("op"),
-            F.col("lsn").alias("_lsn"),
-        )
+        proj = project_to_schema(batch_df, table.manifest())
         # channel-gated idempotence: epochs are monotone within a stream, so
         # the manifest keeps ONE watermark per stream (O(1) metadata however
         # many epochs run) and re-delivered epochs no-op; distinct streams
@@ -143,22 +135,10 @@ def stream_wal_replay(
             .write.mode("append")
             .parquet(quarantine_dir)
         )
-        m = table.manifest()
-        data_cols = [f.name for f in m.current_schema().fields]
-        cols = [c for c in data_cols if c in good.columns]
-        missing = [
-            f for f in m.current_schema().fields if f.name not in good.columns
-        ]
-        proj = good.select(
-            *[F.col(c) for c in cols],
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing],
-            F.col("op"),
-            F.col("lsn").alias("_lsn"),
-        )
         merge_batch(
             spark,
             table,
-            proj,
+            project_to_schema(good, table.manifest()),
             batch_id=f"wal-{stream_id}-epoch-{epoch_id}",
             channel=(f"wal-{stream_id}", int(epoch_id)),
             lineage={

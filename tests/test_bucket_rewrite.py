@@ -174,6 +174,19 @@ def test_compaction_matches_reference(spark, tmp_path, zorder):
     compact_buckets(spark, t, ALL,
                     zorder_by=["url", "warc_ts"] if zorder else None)
     _assert_like_reference(spark, t, m, ALL, want)
+    # every file holds its rows in the sort order, read back in file order
+    sizes = []
+    for b in ALL:
+        for e in t.manifest().files[str(b)]:
+            df = spark.read.parquet(e["path"])
+            key = [F.col("url")]
+            if zorder:
+                zkey = merge_mod._zorder_sort_key(df, ["url", "warc_ts"])
+                key.insert(0, zkey)
+            got = [tuple(r) for r in df.select(*key).collect()]
+            assert got == sorted(got), (b, got)
+            sizes.append(len(got))
+    assert max(sizes) > 1
 
 
 def test_delete_where_matches_reference(spark, tmp_path):
