@@ -32,6 +32,15 @@ primitive, :func:`_write_reduced` (steps 2-3: one exchange, the reduce in the
 write stage, one file per bucket); the four maintenance rewrites also share
 one commit tail, :func:`_rewrite_buckets`.
 
+Merge-on-read batches (:func:`merge_batch` ``mode='mor'``, replay's
+write-ahead :func:`stage_merge` / :func:`commit_staged_merge`, streaming and
+the mirror) take one path: one write and one commit per batch. The write
+tasks reduce the batch behind its one layout exchange
+(:func:`_granule_exchange`) and append a generation per touched bucket; a
+bucket due for compaction folds its base rows into that same write instead
+of a follow-up compaction commit. :func:`compact_buckets` stays as an
+explicit maintenance call.
+
 Idempotence: ``batch_id`` already in the manifest → no-op. This is the
 exactly-once the reference lacks (it re-downloads and re-emits on retry,
 ``MarketoServiceImpl.java:113-133``; "Resume supported: no", README.md:25).
@@ -40,7 +49,7 @@ exactly-once the reference lacks (it re-downloads and re-emits on retry,
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -203,7 +212,8 @@ def _granule_exchange(
     n_buckets: int,
     weights: dict[str, int] | None = None,
     order_col: str = "_lsn",
-) -> DataFrame:
+    whole: set[int] = frozenset(),
+) -> tuple[DataFrame, set[int]]:
     """The merge write's layout exchange: EXACTLY ``4 × defaultParallelism``
     partitions (whole waves at every parallelism; 4 waves bound the
     quantization + unknown-weight raggedness at ≤ a quarter wave), whole
@@ -235,9 +245,16 @@ def _granule_exchange(
     unique ``_lsn``), i.e. classic hot-key salting applied at the WRITE
     layout. Correctness is untouched — the bucket's rows still all land in
     ``_b=<b>`` dirs, there are just K part files for that bucket in this
-    commit (more MoR generations; threshold compaction folds them sooner).
-    Only heavy buckets pay the extra-file cost; uniform tables keep exactly
-    one file per touched bucket.
+    commit, one generation that may hold a key in more than one of its files
+    (written ``reduced=False``). Only heavy buckets pay the extra-file cost;
+    uniform tables keep exactly one file per touched bucket. Buckets in
+    ``whole`` (the ones a merge folds) are never split, so each comes out
+    as one file with one row per key.
+
+    Returns the exchanged frame, which keeps the granule column ``_gr`` (the
+    write stage groups by it: ``HashPartitioning(_gr)`` satisfies any
+    grouping that includes ``_gr``, so the reduce adds no exchange), and the
+    set of buckets it split.
 
     Mechanics: ``repartition(g, col)`` places rows by
     ``pmod(murmur3(col), g)``, so each granule id maps to a salt int whose
@@ -247,7 +264,7 @@ def _granule_exchange(
     same two-wave rule holds."""
     g = min(4 * max(spark.sparkContext.defaultParallelism, 1), n_buckets)
     if g <= 1:
-        return df.repartition(1)
+        return df.withColumn("_gr", F.lit(0)).repartition(1), set()
     # LPT over SUB-ITEMS: heaviest first into the lightest bin (uniform
     # weights degrade to round-robin dealing with no splits)
     import heapq
@@ -268,8 +285,9 @@ def _granule_exchange(
         # straggler against an ~8s mean on the first 16M-row batch. A blanket
         # 2-way split halves the worst case for the one commit that has no
         # better information, at the cost of one extra file per bucket that
-        # the next threshold compaction folds anyway.
-        subs = [2 if g > 1 else 1] * n_buckets
+        # the next fold reduces anyway.
+        subs = [2] * n_buckets
+    subs = [1 if b in whole else sb for b, sb in enumerate(subs)]
     items = [
         (b, si, bw[b] / subs[b]) for b in range(n_buckets)
         for si in range(subs[b])
@@ -312,7 +330,8 @@ def _granule_exchange(
         f"cast(pmod(xxhash64({order_col}), "
         f"size(element_at({arr_sql}, _b + 1))) as int) + 1)"
     )
-    return df.withColumn("_gr", gr).repartition(g, F.col("_gr")).drop("_gr")
+    split = {b for b, sb in enumerate(subs) if sb > 1}
+    return df.withColumn("_gr", gr).repartition(g, F.col("_gr")), split
 
 
 def _bytes_of(entries: list[dict]) -> int:
@@ -345,7 +364,7 @@ def _bloom_ptr_updates(
     ``enable_key_blooms`` backfills — a partial bloom would turn "definitely
     absent" into a lie.
 
-    ``mode='rebuild'`` (compaction / full rewrites): the new
+    ``mode='rebuild'`` (MoR folds, compaction / full rewrites): the new
     files ARE the bucket's complete content (LWW folding keeps one row per
     key and tombstones keep their keys), so a fresh bloom replaces the old
     one — shedding keys vacuumed before the fold and keeping the filter
@@ -430,11 +449,15 @@ def merge_batch(
     them (round-1 ADVICE: a null bucket partition dir aborted the commit
     mid-write).
 
-    mode='mor' (merge-on-read, default): the batch APPENDS delta
-    files to its buckets — per-commit cost is O(batch), one shuffle, no read
-    of base data. Buckets whose file count reaches ``compact_threshold`` are
-    folded (old generations + batch LWW-reduced and rewritten) in the SAME
-    commit, bounding read amplification at ``compact_threshold`` generations.
+    mode='mor' (merge-on-read, default): the batch, LWW-reduced in its
+    write tasks, APPENDS one delta generation to each bucket it touches —
+    per-commit cost is O(batch), one shuffle, no read of base data. A bucket
+    whose next generation would reach ``compact_threshold`` (generations
+    are counted, not files) is folded instead: its base rows join the SAME
+    write and it comes out as one reduced generation — one write and one
+    commit per batch, bounding read amplification below
+    ``compact_threshold`` generations. ``rows_in``/``rows_deleted`` count
+    the batch's raw rows; ``compacted_buckets`` the folded buckets.
     mode='cow' (copy-on-write): every touched bucket is folded each commit —
     cheapest reads, O(touched-bucket data) writes. The batch may carry
     several rows per key; the fold reduces them with the base rows, and
@@ -444,9 +467,10 @@ def merge_batch(
     ValueError before anything is written.
 
     derive: optional {column: Column} of DERIVED schema columns computed
-    AFTER the bucket exchange, in the write tasks — the column rides the
-    shuffle as whatever cheap placeholder the batch carries (typically a
-    typed null) instead of its materialized value. For wide derived columns
+    AFTER the bucket exchange and the reduce, in the write tasks, for the
+    batch's winning rows only — the column rides the shuffle as whatever
+    cheap placeholder the batch carries (typically a typed null) instead of
+    its materialized value. For wide derived columns
     (extracted text ≈ the html it came from) this nearly halves shuffle
     bytes, which is pure memory-bandwidth at high core counts. mor only:
     cow folds base rows by LWW, so a placeholder could win a fold and
@@ -489,10 +513,11 @@ def merge_batch(
         )
 
     staged = _stage_mor(
-        spark, table, m, batch_full, full_cols, derive, label=m.version + 1
+        spark, table, m, batch_full, full_cols, derive,
+        label=m.version + 1, compact_threshold=compact_threshold,
     )
     return _commit_mor(
-        spark, table, m, staged, batch_id, mode, compact_threshold,
+        spark, table, m, staged, batch_id, mode,
         checkpoint, window, channel, lineage, publish,
     )
 
@@ -566,7 +591,9 @@ class StagedMerge:
     CAS). ``label`` is the snapshot version the staging dir was NAMED for;
     the commit renames the dir (and rewrites each entry's generation id) to
     the version it actually lands at, so on-disk layout after commit is
-    byte-identical to a synchronous merge."""
+    byte-identical to a synchronous merge. ``folded``: the buckets the stage
+    folded, each with the file paths it read as their base — their new
+    files replace those lists at commit."""
 
     staging: str
     new_files: dict[str, list[dict]]
@@ -575,11 +602,31 @@ class StagedMerge:
     rows_null_key: int
     schema_version: int
     label: int
+    folded: dict[str, list[str]] = field(default_factory=dict)
 
 
 class StaleStagedMergeError(RuntimeError):
-    """The table's schema changed between stage and commit — the staged
-    files were written under an older schema version and must be restaged."""
+    """The table moved under a staged merge between stage and commit — its
+    schema changed (the staged files carry the old one), or a bucket it
+    folded got new files (the fold would drop them) — so it must be
+    restaged."""
+
+
+def _generations(m: Manifest, b: str) -> int:
+    """Distinct generation ids (``v``) in bucket ``b``: one commit's files
+    are one generation however many files it wrote."""
+    return len({e.get("v", 0) for e in m.files.get(b, [])})
+
+
+def _fold_possible(m: Manifest, compact_threshold: int) -> bool:
+    """Whether a stage made on manifest ``m`` while one commit is still in
+    flight could need a fold: that commit may add a generation to any
+    bucket and the stage adds the next, so some bucket's generation count
+    + 2 reaches ``compact_threshold``."""
+    return any(
+        _generations(m, str(b)) + 2 >= compact_threshold
+        for b in range(m.n_buckets)
+    )
 
 
 def _stage_mor(
@@ -590,44 +637,73 @@ def _stage_mor(
     full_cols: list[str],
     derive: dict[str, Any] | None,
     label: int,
+    compact_threshold: int,
 ) -> StagedMerge:
-    """merge-on-read STAGE: ONE Spark job, ONE shuffle per batch.
+    """merge-on-read STAGE: ONE write, ONE shuffle per batch.
 
-    LSM-style ingest: the batch appends as-is (no per-batch dedup — the
-    threshold-triggered compaction reduces generations in bulk, where the
-    work amortizes and parallelizes). The only shuffle is the layout
-    repartition by bucket; metrics ride on the write job via Observation —
-    including the null-key quarantine count (observed BEFORE the filter).
-    Empty/fully-quarantined batches reclaim their staging dir here and
-    return ``rows_in == 0`` (nothing for the commit phase to publish)."""
+    The only shuffle is the layout exchange by bucket
+    (:func:`_granule_exchange`). The write tasks LWW-reduce their rows by
+    ``(_gr, _b, key)`` — ``HashPartitioning(_gr)`` already meets that
+    grouping — and ``derive`` runs on the winners only. An unsplit bucket's
+    new generation holds one row per key (``reduced=True``); a bucket the
+    exchange split across granules may hold a key in several of its files
+    (``reduced=False``).
+
+    Fold: a bucket with data whose next generation would reach
+    ``compact_threshold`` unions its base rows into the same write, unsplit,
+    and comes out as ONE generation with one row per key. A ``_fresh`` flag
+    keeps the base rows' stored derived values: ``derive`` applies to batch
+    rows only.
+
+    Metrics ride on the write job via Observation, counting the batch's raw
+    rows before the reduce — including the null-key quarantine count
+    (observed BEFORE the filter). Empty/fully-quarantined batches reclaim
+    their staging dir here and return ``rows_in == 0`` (nothing for the
+    commit phase to publish)."""
     from pyspark.sql import Observation
 
     key = m.key_col
     key_null = F.col(key).isNull()
     obs = Observation()
-    to_write = batch_full.select(*full_cols, "_b", key_null.alias("_nk")).observe(
+    rows = batch_full.select(*full_cols, "_b", key_null.alias("_nk")).observe(
         obs,
         F.count_if(~F.col("_nk")).alias("rows_in"),
         F.count_if(F.col("_deleted") & ~F.col("_nk")).alias("rows_deleted"),
         F.count_if(F.col("_nk")).alias("rows_null_key"),
     ).where(~F.col("_nk")).drop("_nk")
+    fold = sorted(
+        int(b) for b in m.files
+        if m.files[b] and _generations(m, b) + 1 >= compact_threshold
+    )
+    if fold:
+        rows = rows.withColumn("_fresh", F.lit(True)).unionByName(
+            _bucket_rows(spark, table, m, fold)
+            .select(*full_cols, "_b", F.lit(False).alias("_fresh"))
+        )
     staging = table.snapshot_staging_dir(label)
     _ensure_stats_friendly_writes(spark)
     # the exchange hands each write task whole buckets, byte-weight-balanced
     # (LPT, heavy buckets salted across granules) — see _granule_exchange
-    write_df = _granule_exchange(
-        spark, to_write, m.n_buckets, weights=m.bucket_bytes
+    exchanged, split = _granule_exchange(
+        spark, rows, m.n_buckets, weights=m.bucket_bytes, whole=set(fold)
     )
-    if derive:
-        # computed ABOVE the exchange: the shuffle moved the placeholder,
-        # the write tasks materialize the real value (plan-audited in
-        # tests/test_round4_fixes.py — the Python-UDF eval node must sit
-        # on the write side of the Exchange)
-        for name, expr in derive.items():
-            write_df = write_df.withColumn(name, expr)
-    write_df = write_df.select(*full_cols, "_b")
+    won = lww_dedup(
+        exchanged, key_cols=["_gr", "_b", key],
+        order_cols=[m.lww_major, "_lsn"],
+    )
+    for name, expr in (derive or {}).items():
+        # computed ABOVE the reduce and the exchange: the shuffle moved the
+        # placeholder, the write tasks materialize the real value for the
+        # winners only (plan-audited in tests/test_mor_fold.py)
+        won = won.withColumn(
+            name, F.when(F.col("_fresh"), expr).otherwise(F.col(name))
+            if fold else expr,
+        )
+    # key order within each file, as a compaction writes it: tight
+    # row-group min/max for point lookups; the writer needs the _b lead
     (
-        write_df
+        won.select(*full_cols, "_b")
+        .sortWithinPartitions("_b", key)
         .write.mode("overwrite")
         .partitionBy("_b")
         .parquet(staging)
@@ -647,19 +723,24 @@ def _stage_mor(
         rows_in = rows_deleted = 0
         rows_null_key = int(batch_full.where(F.col(key).isNull()).count())
     if rows_in == 0:
-        # nothing to commit: reclaim the staging dir instead of orphaning it
+        # nothing to commit (a fold waits for a batch that has rows):
+        # reclaim the staging dir instead of orphaning it
         fsio.remove_dir(staging)
         return StagedMerge(
             "", {}, 0, 0, rows_null_key, m.schema_version, label
         )
 
     new_files = _enumerate_bucket_files(
-        staging, m.schema_version, label, reduced=False,
+        staging, m.schema_version, label,
         stats_col=m.key_col, major_col=m.lww_major,
     )
+    for b, entries in new_files.items():
+        for e in entries:
+            e["reduced"] = int(b) not in split
     return StagedMerge(
         staging, new_files, rows_in, rows_deleted, rows_null_key,
         m.schema_version, label,
+        folded={str(b): [e["path"] for e in m.files[str(b)]] for b in fold},
     )
 
 
@@ -670,7 +751,6 @@ def _commit_mor(
     staged: StagedMerge,
     batch_id: str,
     mode: str,
-    compact_threshold: int,
     checkpoint: dict[str, Any] | None,
     window: tuple[int, int] | None,
     channel: tuple[str, int] | None,
@@ -682,7 +762,9 @@ def _commit_mor(
     :func:`merge_batch` passes the manifest it staged under;
     :func:`commit_staged_merge` (replay's write-ahead commit) passes a fresh
     read, so the commit rebases onto whatever landed since staging — the
-    previous slice's merge and auto-compaction."""
+    previous slice's merge. Appended buckets add their new files to their
+    lists; a folded bucket's new files replace its list, its byte total and
+    its bloom (rebuilt from the files written)."""
     rows_in = staged.rows_in
     rows_deleted = staged.rows_deleted
     rows_null_key = staged.rows_null_key
@@ -712,19 +794,28 @@ def _commit_mor(
         }
         staging = final_dir
 
+    folded = set(staged.folded)
     touched = sorted(int(b) for b in new_files)
-    # metadata delta: only the touched buckets' lists are rebuilt (loading
+    # metadata delta: only the written buckets' lists are rebuilt (loading
     # just their side files); the rest of the table inherits by pointer
-    files = m.files.with_updates(
-        {bk: list(m.files.get(bk, [])) + entries
-         for bk, entries in new_files.items()}
-    )
-    bloom_updates = _bloom_ptr_updates(
-        spark, table, m, new_files, new_version, mode="union"
-    )
+    updates = {
+        bk: entries if bk in folded else list(m.files.get(bk, [])) + entries
+        for bk, entries in new_files.items()
+    }
+    files = m.files.with_updates(updates)
+    bloom_updates: dict[str, str] = {}
+    for bloom_mode, nf in (
+        ("union", {b: es for b, es in new_files.items() if b not in folded}),
+        ("rebuild", {b: es for b, es in new_files.items() if b in folded}),
+    ):
+        if nf:
+            bloom_updates.update(_bloom_ptr_updates(
+                spark, table, m, nf, new_version, mode=bloom_mode
+            ))
     bucket_bytes = dict(m.bucket_bytes)
     for bk, entries in new_files.items():
-        bucket_bytes[bk] = bucket_bytes.get(bk, 0) + _bytes_of(entries)
+        base = 0 if bk in folded else bucket_bytes.get(bk, 0)
+        bucket_bytes[bk] = base + _bytes_of(entries)
 
     applied, ckpt = _commit_bookkeeping(m, batch_id, checkpoint, window, channel)
     nm = m.evolve(
@@ -739,35 +830,23 @@ def _commit_mor(
             "rows_deleted": rows_deleted,
             "rows_null_key": rows_null_key,
             "touched_buckets": len(touched),
+            "compacted_buckets": len(folded),
             "mode": mode,
             "lineage": lineage or {},
         },
         bloom_ptrs={**m.bloom_ptrs, **bloom_updates},
         bucket_bytes=bucket_bytes,
     )
-    if not publish:
+    if publish:
+        table.commit(nm, staging)
+    else:
         # write-audit-publish: durable and auditable (table.read_staged),
-        # invisible until table.publish_staged(batch_id); no auto-compaction
-        # until it is on the chain
+        # invisible until table.publish_staged(batch_id)
         table.write_staged(batch_id, nm)
-        return MergeResult(
-            True, nm.version, rows_in, rows_in - rows_deleted, rows_deleted,
-            len(touched), rows_null_key=rows_null_key, staged=True,
-        )
-    table.commit(nm, staging)
-
-    # auto-compaction: buckets past the read-amplification bound get folded
-    # in a follow-up commit (idempotent rewrite — crashing between the two
-    # commits loses nothing, the next merge re-triggers it)
-    over = [b for b in touched if len(files.pending[str(b)]) >= compact_threshold]
-    version = nm.version
-    if over:
-        version = compact_buckets(spark, table, over)
-
     return MergeResult(
-        True, version, rows_in, rows_in - rows_deleted, rows_deleted,
-        len(touched), compacted_buckets=len(over),
-        rows_null_key=rows_null_key,
+        True, nm.version, rows_in, rows_in - rows_deleted, rows_deleted,
+        len(touched), compacted_buckets=len(folded),
+        rows_null_key=rows_null_key, staged=not publish,
     )
 
 
@@ -780,16 +859,25 @@ def stage_merge(
     derive: dict[str, Any] | None = None,
     manifest: Manifest | None = None,
     label: int | None = None,
+    compact_threshold: int = 8,
 ) -> StagedMerge:
     """Run a merge-on-read batch's CLUSTER work (scan → bucket exchange →
-    parquet write to a private staging dir) WITHOUT committing — the write
-    half of replay's write-ahead commit. Pair with
+    LWW reduce → parquet write to a private staging dir) WITHOUT committing
+    — the write half of replay's write-ahead commit. Pair with
     :func:`commit_staged_merge`, which publishes staged batches in order.
 
     The staged data stays invisible until its commit, so ``replay`` stages
     slice k while slice k-1's commit bookkeeping (footer stats, manifest
-    build, fsync, auto-compaction) runs on a side thread — driver time that
-    would otherwise leave the cluster idle between write jobs.
+    build, fsync) runs on a side thread — driver time that would otherwise
+    leave the cluster idle between write jobs.
+
+    ``compact_threshold``: buckets of ``manifest`` whose next generation
+    would reach it are folded in this write (see :func:`_stage_mor`). The
+    fold reads those buckets' files as ``manifest`` lists them; if they
+    change before the commit, the commit raises
+    :class:`StaleStagedMergeError`. A caller that stages ahead of an
+    in-flight commit must therefore wait for it whenever
+    :func:`_fold_possible` says a fold may be due.
 
     ``label``: the version number used to NAME the staging dir. It must stay
     ABOVE the table's committed frontier until this stage commits (expiry's
@@ -804,6 +892,7 @@ def stage_merge(
     return _stage_mor(
         spark, table, m, batch_full, full_cols, derive,
         label=m.version + 1 if label is None else label,
+        compact_threshold=compact_threshold,
     )
 
 
@@ -813,7 +902,6 @@ def commit_staged_merge(
     staged: StagedMerge,
     batch_id: str,
     mode: str = "mor",
-    compact_threshold: int = 8,
     checkpoint: dict[str, Any] | None = None,
     window: tuple[int, int] | None = None,
     channel: tuple[str, int] | None = None,
@@ -825,22 +913,28 @@ def commit_staged_merge(
     Same idempotence gates as :func:`merge_batch` (re-checked here — the
     stage may have raced an identical batch): an already-applied batch
     reclaims its staged data and no-ops. A schema change between stage and
-    commit raises :class:`StaleStagedMergeError` (the staged files carry the
-    old schema) after reclaiming the staging dir — restage to proceed."""
+    commit, or a folded bucket whose file list changed, raises
+    :class:`StaleStagedMergeError` after reclaiming the staging dir —
+    restage to proceed."""
     m = table.manifest()
     if _already_applied(m, batch_id, window, channel):
         if staged.staging:
             fsio.remove_dir(staged.staging)
         return MergeResult(False, m.version, 0, 0, 0, 0)
-    if m.schema_version != staged.schema_version:
+    moved = [
+        b for b, paths in staged.folded.items()
+        if [e["path"] for e in m.files.get(b, [])] != paths
+    ]
+    if m.schema_version != staged.schema_version or moved:
         if staged.staging:
             fsio.remove_dir(staged.staging)
         raise StaleStagedMergeError(
-            f"table schema moved {staged.schema_version} -> "
-            f"{m.schema_version} between stage and commit of {batch_id}"
+            f"table moved between stage and commit of {batch_id}: schema "
+            f"{staged.schema_version} -> {m.schema_version}, folded buckets "
+            f"with new files {sorted(int(b) for b in moved)}"
         )
     return _commit_mor(
-        spark, table, m, staged, batch_id, mode, compact_threshold,
+        spark, table, m, staged, batch_id, mode,
         checkpoint, window, channel, lineage, publish,
     )
 
@@ -977,7 +1071,7 @@ def _merge_cow(
     append_set = {
         b for b in touched
         if not live[b]["might"]
-        and len({e.get("v", 0) for e in m.files.get(str(b), [])}) < 8
+        and _generations(m, str(b)) < 8
     } if bloom_fast_path and m.bloom_conf else set()
     fold_buckets = [b for b in touched if b not in append_set]
 
@@ -1088,9 +1182,9 @@ def _cow_bloom_updates(
     return updates
 
 
-def _zorder_sort_key(df, zorder_by: list[str]):
-    """Build the 64-bit Morton key for two data columns, picking the
-    order-preserving 32-bit dimension map by column type."""
+def _zorder_dims(df, zorder_by: list[str]) -> list:
+    """The two order-preserving 32-bit dimensions of a Morton key, the map
+    picked by each column's type."""
     from embulk_input_marketo_spark.functions import zorder
 
     if len(zorder_by) != 2:
@@ -1104,7 +1198,14 @@ def _zorder_sort_key(df, zorder_by: list[str]):
             dims.append(zorder.dim_from_string_prefix(name))
         else:
             dims.append(zorder.dim_from_long(name))
-    return zorder.zorder_key(dims[0], dims[1])
+    return dims
+
+
+def _zorder_sort_key(df, zorder_by: list[str]):
+    """The 64-bit Morton key of two data columns, as one expression."""
+    from embulk_input_marketo_spark.functions import zorder
+
+    return zorder.zorder_key(*_zorder_dims(df, zorder_by))
 
 
 def _bucket_rows(
@@ -1114,12 +1215,13 @@ def _bucket_rows(
     buckets: list[int] | None = None,
     n_buckets: int | None = None,
 ) -> DataFrame:
-    """Every file generation of ``buckets`` (all when None), raw: several
-    rows per key, tombstones, ``_lsn``/``_deleted``, and ``_b`` under
-    ``n_buckets`` (default: the manifest's count) — a rewrite's input."""
-    return table.read(spark, buckets=buckets, include_internal=True).withColumn(
-        "_b", bucket_expr(m.key_col, n_buckets or m.n_buckets)
-    )
+    """Every file generation of ``buckets`` (all when None) as manifest
+    ``m`` lists them, raw: several rows per key, tombstones,
+    ``_lsn``/``_deleted``, and ``_b`` under ``n_buckets`` (default: the
+    manifest's count) — a rewrite's or a fold's input."""
+    return table.read(
+        spark, version=m.version, buckets=buckets, include_internal=True
+    ).withColumn("_b", bucket_expr(m.key_col, n_buckets or m.n_buckets))
 
 
 def _write_reduced(
@@ -1131,6 +1233,7 @@ def _write_reduced(
     *,
     sort_cols: list,
     keep: Any = None,
+    bind: dict[str, Any] | None = None,
 ) -> tuple[int, str, dict[str, list[dict]]]:
     """The one bucket-rewrite write: LWW-reduce ``rows`` (the table's
     columns, ``_lsn``, ``_deleted`` and ``_b``; any number per key) to one
@@ -1153,7 +1256,10 @@ def _write_reduced(
       parquet min/max on point lookups, or a z-order key then the key. The
       sort leads with ``_b``: the partitioned writer requires ``_b``
       ordering, and a sort on ``sort_cols`` alone is dropped beneath the
-      ``Sort [_b]`` it adds."""
+      ``Sort [_b]`` it adds.
+    - ``bind``: {name: Column} computed once per winner before the sort and
+      dropped after it, for ``sort_cols`` that use a value many times (the
+      Morton key spreads each dimension's bits in 32 references)."""
     order = sorted({int(b) for b in buckets}) or [0]
     salts = _granule_salts(spark, len(order))
     # the bucket → salt table ships as one SQL literal (one py4j call)
@@ -1170,8 +1276,11 @@ def _write_reduced(
     new_version = m.version + 1
     staging = table.snapshot_staging_dir(new_version)
     _ensure_stats_friendly_writes(spark)
+    if bind:
+        won = won.withColumns(bind)
     (
         won.sortWithinPartitions("_b", *sort_cols)
+        .drop(*(bind or ()))
         .write.mode("overwrite")
         .partitionBy("_b")
         .parquet(staging)
@@ -1193,6 +1302,7 @@ def _rewrite_buckets(
     *,
     sort_cols: list | None = None,
     keep: Any = None,
+    bind: dict[str, Any] | None = None,
     full: bool = False,
     n_buckets: int | None = None,
 ) -> int:
@@ -1209,7 +1319,7 @@ def _rewrite_buckets(
     bucket count (rehash)."""
     new_version, staging, new_files = _write_reduced(
         spark, table, m, rows, buckets,
-        sort_cols=sort_cols or [F.col(m.key_col)], keep=keep,
+        sort_cols=sort_cols or [F.col(m.key_col)], keep=keep, bind=bind,
     )
     if full:
         rewritten, kept_ptrs, kept_bytes = new_files, {}, {}
@@ -1252,13 +1362,20 @@ def compact_buckets(
     usable (looser) min/max. Plain key-sort remains the default."""
     m = table.manifest()
     rows = _bucket_rows(spark, table, m, buckets)
-    sort_cols = None
+    sort_cols = bind = None
     if zorder_by is not None:
-        sort_cols = [_zorder_sort_key(rows, zorder_by), F.col(m.key_col)]
+        from embulk_input_marketo_spark.functions import zorder
+
+        # each dimension is evaluated once per winner, not once per
+        # reference in the bit spreading
+        bind = dict(zip(("_z0", "_z1"), _zorder_dims(rows, zorder_by)))
+        sort_cols = [
+            zorder.zorder_key(F.col("_z0"), F.col("_z1")), F.col(m.key_col)
+        ]
     return _rewrite_buckets(
         spark, table, m, rows, buckets,
         {"operation": "compact", "buckets": [int(b) for b in buckets]},
-        sort_cols=sort_cols,
+        sort_cols=sort_cols, bind=bind,
     )
 
 

@@ -1562,7 +1562,12 @@ class LakeTable:
 
     # ---------------------------------------------------------------- utils
     def applied_batch_ids(self) -> set[str]:
-        return set(self.manifest().applied_batches)
+        """Ids of the batches the ledger still holds (an entry is an id, or
+        ``{"id", "hi"}`` for a batch with a window)."""
+        return {
+            e["id"] if isinstance(e, dict) else e
+            for e in self.manifest().applied_batches
+        }
 
     def checkpoint(self) -> dict[str, Any]:
         return dict(self.manifest().checkpoint)

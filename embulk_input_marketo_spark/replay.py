@@ -76,12 +76,18 @@ def replay(
       (``lake/merge.merge_batch``).
     - mor slices are written ahead: slice k's data is staged to a private
       dir (``lake/merge.stage_merge``) while slice k-1's commit bookkeeping
-      (footer stats, manifest build, fsync, auto-compaction) publishes on
-      one side thread (``commit_staged_merge``), strictly in slice order,
-      so only the driver gap between write jobs is overlapped. ``on_batch``
-      fires on that thread. An uncommitted staged dir is invisible
-      (expiry's in-flight guard skips it), an error path reclaims every
-      unconsumed one, and a rerun converges from the committed hwm.
+      (footer stats, manifest build, fsync) publishes on one side thread
+      (``commit_staged_merge``), strictly in slice order, so only the
+      driver gap between write jobs is overlapped. Each slice is one write
+      and one commit: a bucket due for compaction (``compact_threshold``
+      generations) folds into the slice's own write. Slice k waits for
+      slice k-1's commit before staging only when a fold may be due
+      (``lake/merge._fold_possible``), since the fold reads the base that
+      commit replaces. The commit thread runs with the caller's Spark local
+      properties (job group included); ``on_batch`` fires on it. An
+      uncommitted staged dir is invisible (expiry's in-flight guard skips
+      it), an error path reclaims every unconsumed one, and a rerun
+      converges from the committed hwm.
     - cow slices merge inline (``merge_batch``): each fold reads the base
       the previous slice wrote.
     - ``registry``: before each slice, wait for the in-flight commit, apply
@@ -119,7 +125,6 @@ def replay(
             checkpoint={"hwm_lsn": hi},
             window=(lo, hi),
             lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
-            compact_threshold=compact_threshold,
         )
 
     unconsumed: dict[int, Any] = {}  # slice index → staged, commit pending
@@ -138,15 +143,21 @@ def replay(
                 unconsumed.pop(i, None)
         record(result, hi)
 
-    m = table.manifest()
     pool = ThreadPoolExecutor(max_workers=1)
     pending = None  # the in-flight commit
     try:
         for i, (lo, hi) in enumerate(slices):
+            m = table.manifest()
+            if pending is not None and (
+                registry is not None
+                or lake_merge._fold_possible(m, compact_threshold)
+            ):
+                # the stage folds from, or reconciles against, the manifest
+                # the in-flight commit is about to replace
+                pending.result()
+                pending = None
+                m = table.manifest()
             if registry is not None:
-                if pending is not None:
-                    pending.result()
-                    pending = None
                 registry.reconcile(table, up_to_lsn=hi)
                 m = table.manifest()
             batch, derive = _project_slice(
@@ -158,18 +169,22 @@ def replay(
                     bloom_fast_path=bloom_fast_path, **merge_kw(lo, hi),
                 ), hi)
                 continue
-            # label headroom: each in-order commit advances ≤2 versions (merge
-            # + auto-compaction) and at most one commit is in flight, so +3
-            # per slice keeps every uncommitted staging dir above the
-            # committed frontier — the property expiry's in-flight-writer
-            # guard relies on. The commit renames the dir to its real version.
+            # label headroom: each in-order commit advances 1 version and at
+            # most one commit is in flight, so +2 per slice keeps every
+            # uncommitted staging dir above the committed frontier — the
+            # property expiry's in-flight-writer guard relies on — and no
+            # two slices' labels meet. The commit renames the dir to its
+            # real version.
             unconsumed[i] = lake_merge.stage_merge(
                 spark, table, batch, manifest=m, derive=derive,
-                label=m.version + 3 * (i + 1),
+                label=m.version + 2 * (i + 1),
+                compact_threshold=compact_threshold,
             )
             if pending is not None:
                 pending.result()  # surface a commit error before going deeper
-            pending = pool.submit(commit, i, unconsumed[i])
+            pending = pool.submit(
+                _with_local_properties(spark, commit), i, unconsumed[i]
+            )
         if pending is not None:
             pending.result()
             pending = None
@@ -186,6 +201,20 @@ def replay(
             if staged.staging:
                 fsio.remove_dir(staged.staging)
     return report
+
+
+def _with_local_properties(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn``, run with a copy of the calling thread's Spark local
+    properties (job group, scheduler pool) taken now: a side thread's jobs
+    then belong to the caller's group, as they would inline."""
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+
+    def run(*args: Any) -> Any:
+        jsc.setLocalProperties(props)
+        return fn(*args)
+
+    return run
 
 
 def _max_lsn(changelog: DataFrame) -> int:

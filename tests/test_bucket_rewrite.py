@@ -326,6 +326,21 @@ def test_rewrite_write_plan_has_one_exchange(spark, tmp_path, op):
     assert _write_exchanges(_plans_since(spark, first)) == 1
 
 
+def test_zorder_write_plan_evaluates_each_dimension_once(spark, tmp_path):
+    """The Morton key spreads each dimension's bits with 32 references to
+    it; the dimensions are bound as columns first, so the executed write
+    plan (final and initial plan together) holds the url prefix expression
+    where it is bound, at most twice, not 32 times per plan."""
+    t = _table(spark, tmp_path, bloom=False)
+    first = _first_execution(spark)
+    OPS["compact_zorder"](spark, t)
+    plan = [p for p in _plans_since(spark, first)
+            if "InsertIntoHadoopFsRelationCommand" in p][-1]
+    assert 1 <= len(re.findall(r"substring\(url(#\d+)?, 1, 1\)", plan)) <= 2
+    assert {f.name for f in spark.read.parquet(
+        t.manifest().files["0"][0]["path"]).schema} == set(COLS)
+
+
 def test_compaction_runs_two_jobs(spark, tmp_path):
     """Compacting 8 dirty buckets runs the exchange's map stage and the
     write: 2 jobs."""

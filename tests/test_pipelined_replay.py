@@ -82,9 +82,11 @@ def _state_hash(spark, table):
 @pytest.mark.parametrize("compact_threshold", [8, 2])
 def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
                                            compact_threshold):
-    """Same changelog through replay and the reference (threshold 2 forces
-    auto-compaction commits BETWEEN a slice's stage and its commit — the
-    version-interleaving case the future-label headroom exists for)."""
+    """Same changelog through replay and the reference (threshold 2 folds
+    every bucket from the second slice on, so each stage waits for the
+    previous commit; threshold 8 never folds, so every stage runs ahead of
+    the previous commit under a future label). Either way each slice is
+    one commit."""
     seq = _mk(tmp_path, changelog, "seq")
     pipe = _mk(tmp_path, changelog, "pipe")
     ref = _reference_replay(spark, changelog, seq, 5_000,
@@ -96,7 +98,8 @@ def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
     assert len(r.batches) == len(ref) == 4
     assert all(b.applied for b in r.batches)
     assert r.end_hwm == resume_hwm(seq)
-    assert [b.version for b in r.batches] == [b.version for b in ref]
+    assert [b.version for b in r.batches] == [b.version for b in ref] \
+        == [1, 2, 3, 4]
     assert _state_hash(spark, pipe) == _state_hash(spark, seq)
 
 
@@ -197,3 +200,45 @@ def test_commit_staged_raises_on_schema_drift(spark, changelog, tmp_path):
     with pytest.raises(StaleStagedMergeError):
         commit_staged_merge(spark, table, staged, batch_id="drift1")
     assert not os.path.exists(staged.staging)
+
+
+def test_commit_thread_jobs_run_in_the_callers_job_group(spark, changelog,
+                                                        tmp_path):
+    """Under ``setJobGroup``, every job a two-slice replay on a bloom table
+    runs — the side thread's commits (bloom upkeep) included — is in the
+    caller's group: the status store records no job in that span outside
+    it. Marker jobs in their own groups bound the span."""
+    import time
+    import uuid
+
+    table = LakeTable.create(str(tmp_path / "grp"), _schema(changelog),
+                             key_col="url", n_buckets=16, bloom_bits=1 << 12)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex
+
+    def marker(name):
+        sc.setJobGroup(name, name)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        for _ in range(100):  # the status store is fed asynchronously
+            ids = tracker.getJobIdsForGroup(name)
+            if ids:
+                return ids
+            time.sleep(0.05)
+        raise AssertionError(f"marker job {name} never recorded")
+
+    lo = max(marker(f"before-{tag}"))
+    group = f"replay-{tag}"
+    sc.setJobGroup(group, group)
+    try:
+        r = replay(spark, changelog.where(F.col("lsn") < 4_000), table,
+                   n_slices=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    hi = min(marker(f"after-{tag}"))
+    assert len(r.batches) == 2 and all(b.applied for b in r.batches)
+    in_group = set(tracker.getJobIdsForGroup(group))
+    assert in_group and in_group == set(range(lo + 1, hi))

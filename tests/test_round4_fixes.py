@@ -918,7 +918,8 @@ class TestGranuleHotBucketSplit:
         df = spark.createDataFrame(rows, "_b int, _lsn long")
         weights = {str(b): (10_000 if b == 3 else 1_000)
                    for b in range(n_buckets)}
-        out = _granule_exchange(spark, df, n_buckets, weights=weights)
+        out, split = _granule_exchange(spark, df, n_buckets, weights=weights)
+        assert split == {3}
         sizes = (
             out.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
         )
@@ -929,7 +930,7 @@ class TestGranuleHotBucketSplit:
         assert max(sizes) < 20_000, sizes
         # and every row still lands in a granule that writes its bucket:
         # bucket/row assignment must be a pure function of (_b, _lsn)
-        again = _granule_exchange(spark, df, n_buckets, weights=weights)
+        again, _ = _granule_exchange(spark, df, n_buckets, weights=weights)
         s2 = again.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
         assert sorted(sizes) == sorted(s2)
 
